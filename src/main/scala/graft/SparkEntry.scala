@@ -1661,8 +1661,9 @@ object SparkEntry {
     // driver-local warm serving path (query/LocalServe): the pinned-cell
     // in-process query loop that closes the reference's one remaining
     // win — warm single-query latency (1.48 ms vs the ~100 ms Spark job
-    // floor; ServeProbe measures 1.0 ms p50 at the reference's own
-    // 100k×1536 K=10 nprobe=5 shape). The invariant is EXACT parity:
+    // floor; perfbench `reference` measures its warm p50 at the
+    // reference's P=100 D=12 C=256 K=10 nprobe=5 shape, see
+    // perfbench/README.md). The invariant is EXACT parity:
     // same ids, same partitions, BIT-IDENTICAL sq_dist, same
     // (sq_dist, id) order as AnnQuery.topK on the same saved store,
     // over three queries × (k=10, nprobe=4)

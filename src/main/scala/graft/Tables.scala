@@ -20,13 +20,15 @@ object Tables {
     * thousands of 30-60 ms driver round-trips for a schema that never
     * changes. The memo caches the analyzed DataFrame (plan metadata
     * only — every action still scans the parquet). Keyed on the
-    * SparkSession OBJECT in a weak map: identity semantics with no
-    * hash-collision risk between live sessions, and a stopped session
-    * (with its cached plans) stays GC-able instead of being pinned for
-    * the JVM lifetime. The cached plan freezes the table dir's file
-    * listing snapshot — table dirs are immutable within a session by
-    * contract (the test fixtures never regenerate in place). */
-  private val loadMemo = new java.util.WeakHashMap[
+    * SparkSession OBJECT (identity semantics, no hash-collision risk
+    * between live sessions). A cached DataFrame references its session,
+    * so no weak key could ever be collected: instead a session's entry
+    * is evicted when its SparkContext stops (the application-end event),
+    * and a stopped session and its plans are not pinned for the JVM
+    * lifetime. The cached plan freezes the table dir's file listing
+    * snapshot — table dirs are immutable within a session by contract
+    * (the test fixtures never regenerate in place). */
+  private val loadMemo = new java.util.IdentityHashMap[
     SparkSession, scala.collection.concurrent.TrieMap[(String, String),
       DataFrame]]()
 
@@ -37,12 +39,22 @@ object Tables {
         m = scala.collection.concurrent.TrieMap.empty[(String, String),
           DataFrame]
         loadMemo.put(spark, m)
+        spark.sparkContext.addSparkListener(
+          new org.apache.spark.scheduler.SparkListener {
+            override def onApplicationEnd(
+                end: org.apache.spark.scheduler.SparkListenerApplicationEnd)
+                : Unit = loadMemo.synchronized { loadMemo.remove(spark) }
+          })
       }
       m
     }
     perSession.getOrElseUpdate((dir, name),
       spark.read.parquet(s"$dir/$name.parquet"))
   }
+
+  /** Whether `spark` has a memo entry (for the eviction spec). */
+  private[graft] def memoized(spark: SparkSession): Boolean =
+    loadMemo.synchronized(loadMemo.containsKey(spark))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -1617,23 +1617,33 @@ object Kernels {
     val out = new Array[Double](d * c)
     var di = 0
     while (di < d) {
-      val off = di * m
       var ci = 0
       while (ci < c) {
-        val cb = (di * c + ci) * m
-        var s = 0.0
-        i = 0
-        while (i < m) {
-          val diff = loc(off + i) - books(cb + i)
-          s += diff * diff
-          i += 1
-        }
-        out(di * c + ci) = s
+        out(di * c + ci) = subSqDist(loc, di * m, books, (di * c + ci) * m, m)
         ci += 1
       }
       di += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Σ_{i<m} (a(ao + i) − b(bo + i))², folded in ascending i: one ADC
+    * table entry (reference db/stored.rs:549-573) and one coarse-cell
+    * distance. The one scalar copy of that fold — [[adcTableF]] and the
+    * in-process query prep ([[graft.query.AnnQuery.adcTables]],
+    * [[graft.query.AnnQuery.selectPartitions]]) fold through it, and
+    * [[SimdKernels.adcTablesExact]] / [[SimdKernels.cellDistsExact]]
+    * reproduce its bits lane by lane. */
+  def subSqDist(a: Array[Double], ao: Int, b: Array[Double], bo: Int,
+                m: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < m) {
+      val diff = a(ao + i) - b(bo + i)
+      s += diff * diff
+      i += 1
+    }
+    s
   }
 
   /** ADC distance Σ_d table[d·C + codes[d]] — pure lookups into the

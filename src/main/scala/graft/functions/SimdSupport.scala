@@ -5,8 +5,8 @@ package graft.functions
   * [[SimdSupport.available]] BEFORE touching SimdKernels, so a JVM
   * launched without `--add-modules jdk.incubator.vector` falls back to
   * the scalar paths instead of dying on NoClassDefFoundError at class
-  * init. `GRAFT_SIMD=off` forces the scalar paths (the A/B lever the
-  * serve probes use); the 8-lane requirement pins the byte→double
+  * init. `GRAFT_SIMD=off` forces the scalar paths (the A/B lever for
+  * serve measurements); the 8-lane requirement pins the byte→double
   * widening shape the SQ8 kernel needs (AVX-512 and SVE-512 boxes —
   * narrower machines serve through the scalar paths, same bits). */
 object SimdSupport {

@@ -18,6 +18,18 @@ import org.apache.spark.sql.DataFrame
   * identical sequence. */
 object VecCollect {
 
+  /** Bytes of one partition's blob: rows·dim f32s, computed in Long so
+    * a partition past 2 GB fails loudly here instead of overflowing
+    * into a negative or short allocation. */
+  private[functions] def blobBytes(rows: Int, dim: Int): Int = {
+    val bytes = rows.toLong * dim * 4
+    require(bytes <= Int.MaxValue - 8,
+      s"collectVecs: a partition of $rows rows x dim $dim is $bytes bytes, " +
+        s"past the ${Int.MaxValue - 8}-byte array limit; repartition the " +
+        "sample into more partitions")
+    bytes.toInt
+  }
+
   /** Collect the single array<float> column of `df` as
     * Array[Array[Float]], preserving collect() row order. */
   def collectVecs(df: DataFrame): Array[Array[Float]] = {
@@ -38,7 +50,7 @@ object VecCollect {
               s" vs dim $dim)")
           i += 1
         }
-        val bb = java.nio.ByteBuffer.allocate(rows.length * dim * 4)
+        val bb = java.nio.ByteBuffer.allocate(blobBytes(rows.length, dim))
         val fb = bb.asFloatBuffer()
         i = 0
         while (i < rows.length) { fb.put(rows(i)); i += 1 }

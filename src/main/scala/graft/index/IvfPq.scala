@@ -51,6 +51,14 @@ case class IvfPqModel(
     partitionCentroids: Array[Array[Double]],     // P × N
     codebooks: Array[Array[Array[Double]]]) {     // D × C × (N/D)
   def subDim: Int = dim / config.numDivisions
+
+  // column-major copies read by the Vector-API query prep
+  // (graft.functions.SimdKernels): built once per model, on its first
+  // query through that path, and never serialized
+  @transient private[graft] lazy val codebooksT: Array[Array[Double]] =
+    codebooks.map(graft.functions.SimdKernels.transposed(_))
+  @transient private[graft] lazy val centroidsT: Array[Double] =
+    graft.functions.SimdKernels.cellMajor(partitionCentroids)
 }
 
 /** Builds an IVF+PQ index as DataFrame transformations + driver-local

@@ -24,7 +24,11 @@ import graft.functions.FastFunctions._
   */
 final case class IvfSq8Model(dim: Int, numPartitions: Int,
                              partitionCentroids: Array[Array[Double]],
-                             codec: Sq8Model)
+                             codec: Sq8Model) {
+  // see IvfPqModel.centroidsT
+  @transient private[graft] lazy val centroidsT: Array[Double] =
+    graft.functions.SimdKernels.cellMajor(partitionCentroids)
+}
 
 object IvfSq8 {
 
@@ -208,21 +212,15 @@ object IvfSq8 {
       org.apache.spark.sql.SaveMode.Overwrite)
   }
 
-  /** Selected cells: (partition id, localized query q − centroid). */
+  /** Selected cells: (partition id, localized query q − centroid), by
+    * the same rule and arithmetic as
+    * [[graft.query.AnnQuery.selectPartitions]]. */
   def selectPartitions(model: IvfSq8Model, q: Array[Double],
                        nprobe: Int): Array[(Int, Array[Double])] = {
     require(nprobe >= 1 && nprobe <= model.numPartitions,
       s"nprobe $nprobe out of range 1..${model.numPartitions}")
-    model.partitionCentroids.zipWithIndex.map { case (c, p) =>
-      val localized = new Array[Double](q.length)
-      var i = 0; var dist = 0.0
-      while (i < q.length) {
-        localized(i) = q(i) - c(i)
-        dist += localized(i) * localized(i)
-        i += 1
-      }
-      (dist, p, localized)
-    }.sortBy(t => (t._1, t._2)).take(nprobe).map(t => (t._2, t._3))
+    graft.query.AnnQuery.nearestCells(model.partitionCentroids,
+      model.centroidsT, q, nprobe)
   }
 
   /** Approximate top-k: (id, partition, sq_dist) ascending — asymmetric

@@ -3,6 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Kernels, SimdKernels, SimdSupport}
 import graft.index.IvfPqModel
 
 /** IVF+PQ approximate k-NN over an encoded codes table — the reference's
@@ -35,41 +36,107 @@ object AnnQuery {
       : Array[(Int, Array[Double])] = {
     require(nprobe >= 1 && nprobe <= model.config.numPartitions,
       s"nprobe $nprobe out of range 1..${model.config.numPartitions}") // db/stored.rs:403-409
-    model.partitionCentroids.zipWithIndex.map { case (c, p) =>
-      val localized = new Array[Double](q.length)
-      var i = 0; var dist = 0.0
-      while (i < q.length) {
-        localized(i) = q(i) - c(i)
-        dist += localized(i) * localized(i)
-        i += 1
+    nearestCells(model.partitionCentroids, model.centroidsT, q, nprobe)
+  }
+
+  /** The nprobe cells nearest q, ascending by (squared distance, cell
+    * id), each with the localized query q − centroid. Distances fold
+    * through [[Kernels.subSqDist]] or its lane-exact twin
+    * [[SimdKernels.cellDistsExact]] over `centT` (the
+    * [[SimdKernels.cellMajor]] copy, forced only on that path); only the
+    * winners are localized. */
+  private[graft] def nearestCells(centroids: Array[Array[Double]],
+      centT: => Array[Double], q: Array[Double],
+      nprobe: Int): Array[(Int, Array[Double])] = {
+    val n = centroids.length
+    val dim = q.length
+    require(n == 0 || centroids(0).length == dim,
+      s"query has dim $dim, centroids ${centroids(0).length}")
+    val dist =
+      if (SimdSupport.available) {
+        val ct = centT
+        val out = new Array[Double](ct.length / dim)
+        SimdKernels.cellDistsExact(ct, q, out)
+        out
+      } else Array.tabulate(n)(p => Kernels.subSqDist(q, 0, centroids(p), 0, dim))
+    // insertion into the sorted best-so-far; cells arrive in id order,
+    // so the strict < keeps the lower id ahead on equal distances
+    def before(a: Int, b: Int) = java.lang.Double.compare(dist(a), dist(b)) < 0
+    val best = new Array[Int](nprobe)
+    var filled = 0
+    var p = 0
+    while (p < n) {
+      if (filled < nprobe || before(p, best(nprobe - 1))) {
+        var j = if (filled < nprobe) { filled += 1; filled - 1 } else nprobe - 1
+        while (j > 0 && before(p, best(j - 1))) { best(j) = best(j - 1); j -= 1 }
+        best(j) = p
       }
-      (dist, p, localized)
-    }.sortBy(t => (t._1, t._2)).take(nprobe).map(t => (t._2, t._3))
+      p += 1
+    }
+    best.map { p =>
+      val c = centroids(p)
+      val localized = new Array[Double](dim)
+      var i = 0
+      while (i < dim) { localized(i) = q(i) - c(i); i += 1 }
+      (p, localized)
+    }
   }
 
   /** D×C ADC table for one localized query (db/stored.rs:549-573). */
   def adcTable(model: IvfPqModel, localized: Array[Double]): Array[Array[Double]] = {
+    val flat = adcTables(model, Array(localized))(0)
+    val c = model.config.numCodes
+    Array.tabulate(model.config.numDivisions)(d =>
+      java.util.Arrays.copyOfRange(flat, d * c, (d + 1) * c))
+  }
+
+  /** [[adcTable]] of every localized query, each flattened as the scan
+    * reads it: tables(p)(d·C + c). */
+  private[graft] def adcTables(model: IvfPqModel,
+                               locs: Array[Array[Double]]): Array[Array[Double]] = {
+    val d = model.config.numDivisions
+    val flats = locs.map(_ => new Array[Double](d * model.config.numCodes))
+    adcTablesInto(model, locs, flats, 0, d)
+    flats
+  }
+
+  /** Divisions [div0, div1) of [[adcTables]] into `flats` — the unit a
+    * server splits one query's table prep into. The Vector-API kernel
+    * ([[SimdKernels.adcTablesExact]]) makes one codebook pass for every
+    * probe; the scalar path folds each entry through
+    * [[Kernels.subSqDist]]; both give the same bits. */
+  private[graft] def adcTablesInto(model: IvfPqModel, locs: Array[Array[Double]],
+      flats: Array[Array[Double]], div0: Int, div1: Int): Unit = {
     val m = model.subDim
-    Array.tabulate(model.config.numDivisions) { d =>
-      Array.tabulate(model.config.numCodes) { c =>
-        val cb = model.codebooks(d)(c)
-        var i = 0; var s = 0.0
-        while (i < m) {
-          val diff = localized(d * m + i) - cb(i)
-          s += diff * diff
-          i += 1
+    val numCodes = model.config.numCodes
+    var div = div0
+    while (div < div1) {
+      if (SimdSupport.available)
+        SimdKernels.adcTablesExact(model.codebooksT(div), m, numCodes,
+          locs, div * m, flats, div * numCodes)
+      else {
+        val cbs = model.codebooks(div)
+        var p = 0
+        while (p < locs.length) {
+          var c = 0
+          while (c < numCodes) {
+            flats(p)(div * numCodes + c) =
+              Kernels.subSqDist(locs(p), div * m, cbs(c), 0, m)
+            c += 1
+          }
+          p += 1
         }
-        s
       }
+      div += 1
     }
   }
 
   /** ADC distance column: Σ_d table[d][codes[d]] as one kernel call
     * against the flattened D×C table literal. No UDF, no broadcast
     * variable — the table rides in the generated code as a constant. */
-  private def adcDistCol(table: Array[Array[Double]], codes: Column): Column =
-    graft.functions.FastFunctions.adcDist(
-      codes, table.flatten.toSeq, table(0).length)
+  private def adcDistCol(flatTable: Array[Double], numCodes: Int,
+                         codes: Column): Column =
+    graft.functions.FastFunctions.adcDist(codes, flatTable.toSeq, numCodes)
 
   /** Approximate top-k: returns (id, partition, sq_dist) ascending.
     * `codes` must carry (id, partition, codes) — typically the
@@ -128,18 +195,18 @@ object AnnQuery {
     // one scan with a pruning IN-filter; per-cell ADC tables dispatched by
     // a CASE over the (small) probe set — single pass, single codegen span.
     val t0 = System.nanoTime()
-    val tables = probes.map { case (p, localized) =>
-      (p, adcTable(model, localized))
-    }
+    val tables = probes.map(_._1).zip(adcTables(model, probes.map(_._2)))
+    val numCodes = model.config.numCodes
     log(f"build-adc-tables n=${tables.length} " +
       f"shape=${model.config.numDivisions}x${model.config.numCodes} " +
       f"${(System.nanoTime() - t0) / 1e9}%.4f s")
     val pruned = codes.where(col("partition").isin(probes.map(_._1): _*))
     val dist = tables.tail.foldLeft(
       when(col("partition") === tables.head._1,
-        adcDistCol(tables.head._2, col("codes")))) {
+        adcDistCol(tables.head._2, numCodes, col("codes")))) {
       case (acc, (p, table)) =>
-        acc.when(col("partition") === p, adcDistCol(table, col("codes")))
+        acc.when(col("partition") === p,
+          adcDistCol(table, numCodes, col("codes")))
     }
     log(s"scan cells=${probes.map(_._1).mkString(",")} — pruned IN-filter " +
       s"+ ADC lookup distance, lazy (fused with merge)")
@@ -171,8 +238,9 @@ object AnnQuery {
     val spark = codes.sparkSession
     import spark.implicits._
     val probes = queries.flatMap { case (qid, q) =>
-      selectPartitions(model, q, nprobe).map { case (p, localized) =>
-        (qid, p, adcTable(model, localized).flatten.toSeq)
+      val sel = selectPartitions(model, q, nprobe)
+      sel.map(_._1).zip(adcTables(model, sel.map(_._2))).map { case (p, t) =>
+        (qid, p, t.toSeq)
       }
     }.toDF("qid", "partition", "flat_table")
     // static IN-filter on the union of probed cells → parquet partition

@@ -14,8 +14,8 @@ import graft.index.{IvfPqBuilder, IvfPqModel}
   * (centroids + codebooks) are driver-resident by design already, and a
   * serving box additionally pins the code arrays of the cells it
   * serves. Everything here reuses the cluster path's arithmetic —
-  * [[AnnQuery.selectPartitions]] for cell choice, [[AnnQuery.adcTable]]
-  * for table build, and an ADC fold in the same index order as
+  * [[AnnQuery.selectPartitions]] for cell choice, [[AnnQuery.adcTable]]'s
+  * entries for table build, and an ADC fold in the same index order as
   * [[graft.functions.Kernels.adcDist]] — so results are IDENTICAL to
   * [[AnnQuery.topK]] on the same store (asserted by the
   * `ann_local_serve` gate and LocalServeSpec).
@@ -38,18 +38,17 @@ final class LocalServe private[query] (
     inlineCompute: Boolean = false) extends PqShard {
 
   /** A view of this server whose per-query prep (rotation + ADC
-    * tables) runs INLINE on the calling thread instead of fanning out
-    * over the shared future pool. Same arithmetic, same bits — only
-    * the scheduling changes; shares the pinned cell arrays.
+    * tables) runs wholly on the calling thread instead of fanning out
+    * over the shared pool (see [[prepare]]). Same arithmetic, same bits
+    * — only the scheduling changes; shares the pinned cell arrays.
     *
-    * MEASURED GUIDANCE (ServeLoadProbe A/B, BENCH_NOTES r12): this is
-    * NOT a throughput unlock — at T=32 inline ≈ futures for OPQ
-    * (1.40k vs 1.47k QPS) and +10% for SQ8, which PROVES the r11 OPQ
-    * T≥8 flatten is aggregate compute/bandwidth, not pool contention;
-    * and at low concurrency inline is far WORSE (OPQ p50 2.4 → 14 ms —
-    * the fan-out genuinely parallelizes one query's d² + D·C work).
-    * Use it only to keep the global pool free for OTHER work on a box
-    * that also runs compute futures, never for latency. */
+    * Measured guidance (the r12 A/B in BENCH_NOTES.md): this is NOT a
+    * throughput unlock — at 32 client threads inline ≈ futures for OPQ
+    * and +10% for SQ8, so the OPQ flatten there is aggregate
+    * compute/bandwidth, not pool contention; at low concurrency inline
+    * is slower, because the fan-out parallelizes one query's prep. Use
+    * it only to keep the global pool free for OTHER work on a box that
+    * also runs compute futures, never for latency. */
   def withInlineCompute: LocalServe =
     new LocalServe(model, cellIds, cellCodes, rotation, cellAttrs, true)
 
@@ -68,7 +67,7 @@ final class LocalServe private[query] (
   // built once per server, absent when the scalar path serves
   private lazy val rotT: Option[Array[Double]] =
     rotation.filter(_ => graft.functions.SimdSupport.available)
-      .map(graft.functions.SimdKernels.transposed)
+      .map(graft.functions.SimdKernels.transposed(_))
 
   /** FILTERED warm top-k — the warm twin of the pre-filtered cluster
     * composition (`ann_filtered`: the attribute join narrows the coded
@@ -126,127 +125,7 @@ final class LocalServe private[query] (
         s" (resident: ${cells.mkString(",")})")
     val d = model.config.numDivisions
     val numCodes = model.config.numCodes
-    // ADC tables in parallel across (cell, division) — the table build
-    // is ~P_nprobe·D·C·subdim flops and dominates warm latency (3.0 ms
-    // sequential vs ~0.15 ms for everything else at the reference's
-    // 100k×1536 shape); each (d, c) entry's arithmetic is UNCHANGED
-    // from AnnQuery.adcTable, so sq_dist stays bit-identical to the
-    // cluster path. Futures over the shared global pool: ~60 tasks of
-    // ~65k flops each, far above dispatch cost. An OPQ rotation (d²
-    // flops per probe — ~2.4M at 1536, the same order as one table)
-    // rides INSIDE each probe's future chain, so it parallelizes
-    // across probes instead of serializing in front of them.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val m = model.subDim
-    val flats: Array[Array[Double]] = if (inlineCompute) {
-      // THROUGHPUT path: identical folds, zero future dispatch — the
-      // calling thread does its own query's work (see withInlineCompute)
-      probes.map { case (_, localized0) =>
-        val localized = rotation match {
-          case Some(r) =>
-            val dimLen = r.length
-            val rotated = new Array[Double](dimLen)
-            rotT match {
-              case Some(rt) => graft.functions.SimdKernels
-                .rotateExact(rt, dimLen, localized0, rotated, 0, dimLen)
-              case None =>
-                var rr = 0
-                while (rr < dimLen) {
-                  val row = r(rr)
-                  var s = 0.0
-                  var t = 0
-                  while (t < dimLen) { s += row(t) * localized0(t); t += 1 }
-                  rotated(rr) = s
-                  rr += 1
-                }
-            }
-            rotated
-          case None => localized0
-        }
-        val flat = new Array[Double](d * numCodes)
-        var div = 0
-        while (div < d) {
-          val cbs = model.codebooks(div)
-          var c = 0
-          while (c < numCodes) {
-            val cb = cbs(c)
-            var i = 0; var s = 0.0
-            while (i < m) { // same fold as AnnQuery.adcTable
-              val diff = localized(div * m + i) - cb(i)
-              s += diff * diff
-              i += 1
-            }
-            flat(div * numCodes + c) = s
-            c += 1
-          }
-          div += 1
-        }
-        flat
-      }
-    } else {
-      def tables(localized: Array[Double]): Future[Array[Double]] = {
-        val flat = new Array[Double](d * numCodes)
-        Future.sequence((0 until d).map { div =>
-          Future {
-            val cbs = model.codebooks(div)
-            var c = 0
-            while (c < numCodes) {
-              val cb = cbs(c)
-              var i = 0; var s = 0.0
-              while (i < m) { // same fold as AnnQuery.adcTable
-                val diff = localized(div * m + i) - cb(i)
-                s += diff * diff
-                i += 1
-              }
-              flat(div * numCodes + c) = s
-              c += 1
-            }
-          }
-        }).map(_ => flat)
-      }
-      val futs = probes.map { case (_, localized0) =>
-        rotation match {
-          // rotation chained in front of the probe's own fan-out, and
-          // ROW-CHUNKED across futures: each out(r) is an independent
-          // row fold (identical arithmetic to OpqBuilder.rotateVec, so
-          // bit-parity with the cluster path holds), and a 1536-dim
-          // rotation is ~2.4M flops — serial per probe it would double
-          // warm latency, chunked it costs one future round. The plain
-          // path submits its division futures immediately, unchanged.
-          case Some(r) =>
-            val dimLen = r.length
-            val rotated = new Array[Double](dimLen)
-            val block = 128
-            Future.sequence((0 until dimLen by block).map { s0 =>
-              Future {
-                val e = math.min(s0 + block, dimLen)
-                rotT match {
-                  // Vector-API mat-vec: 8 output rows per 512-bit
-                  // accumulator, per-row t order unchanged — the lanes
-                  // compute the scalar loop's exact bits
-                  // (SimdKernelsSpec; the OPQ serve gate re-proves it)
-                  case Some(rt) => graft.functions.SimdKernels
-                    .rotateExact(rt, dimLen, localized0, rotated, s0, e)
-                  case None =>
-                    var rr = s0
-                    while (rr < e) {
-                      val row = r(rr)
-                      var s = 0.0
-                      var t = 0
-                      while (t < dimLen) { s += row(t) * localized0(t); t += 1 }
-                      rotated(rr) = s
-                      rr += 1
-                    }
-                }
-              }
-            }).flatMap(_ => tables(rotated))
-          case None => tables(localized0)
-        }
-      }
-      Await.result(Future.sequence(futs.toSeq), Duration.Inf).toArray
-    }
+    val flats = prepare(probes)
     // bounded top-k over all probed cells: a size-k max-heap on
     // (sq_dist desc, id desc) so the worst survivor is evicted first
     val heap = new java.util.PriorityQueue[(Long, Int, Double)](
@@ -285,6 +164,62 @@ final class LocalServe private[query] (
     var i = out.length - 1
     while (i >= 0) { out(i) = heap.poll(); i -= 1 }
     out
+  }
+
+  /** One query's prep: the OPQ rotation (when present) of each localized
+    * query, then one flat D·C ADC table per probe
+    * ([[AnnQuery.adcTablesInto]]: entries, fold order and bits of
+    * [[AnnQuery.adcTable]], so sq_dist stays bit-identical to the
+    * cluster path). The table prep is the whole of a warm query's cost
+    * bar a few-µs scan, so it runs as D units of one division each —
+    * every probe's tables for that division, in one pass over its
+    * codebook — and the rotation as 128-row units of every probe. Up to
+    * min(D, cores) workers claim units: the calling thread and helpers
+    * on the global pool ([[LocalServe.fanOut]]); [[withInlineCompute]]
+    * is the one-worker case. `perfbench` `reference` measures it
+    * (`op_p50_ms`, `query.adc_table_us`, `query.select_partitions_us`). */
+  private def prepare(probes: Array[(Int, Array[Double])]): Array[Array[Double]] = {
+    val d = model.config.numDivisions
+    val workers =
+      if (inlineCompute) 1
+      else math.min(d, Runtime.getRuntime.availableProcessors())
+    val locs = rotation match {
+      case None => probes.map(_._2)
+      case Some(r) =>
+        // exact doubles, the identical step OpqBuilder.topK performs
+        // before its scan (OpqBuilder.rotateVec's per-row t order)
+        val dim = r.length
+        val block = 128
+        val rotated = probes.map(_ => new Array[Double](dim))
+        LocalServe.fanOut(workers, (dim + block - 1) / block) { u =>
+          val (r0, r1) = (u * block, math.min(dim, (u + 1) * block))
+          var pi = 0
+          while (pi < probes.length) {
+            val (v, out) = (probes(pi)._2, rotated(pi))
+            rotT match {
+              case Some(rt) =>
+                graft.functions.SimdKernels.rotateExact(rt, dim, v, out, r0, r1)
+              case None =>
+                var rr = r0
+                while (rr < r1) {
+                  val row = r(rr)
+                  var s = 0.0
+                  var i = 0
+                  while (i < dim) { s += row(i) * v(i); i += 1 }
+                  out(rr) = s
+                  rr += 1
+                }
+            }
+            pi += 1
+          }
+        }
+        rotated
+    }
+    val flats = probes.map(_ => new Array[Double](d * model.config.numCodes))
+    LocalServe.fanOut(workers, d) { div =>
+      AnnQuery.adcTablesInto(model, locs, flats, div, div + 1)
+    }
+    flats
   }
 }
 
@@ -607,6 +542,36 @@ object LocalServeSq8 {
 }
 
 object LocalServe {
+
+  /** Runs body(u) for every unit u ∈ [0, units) on up to `workers`
+    * threads: the calling thread and workers − 1 helpers on the global
+    * pool claim units from one counter, so a helper that starts late
+    * finds less work instead of holding the query up (on a 4-core box,
+    * claimed units answered in ~80 µs where four fixed division ranges
+    * took ~115 µs, waiting on the slowest helper to wake). Returns once
+    * every unit has finished, rethrowing the first failure. */
+  private def fanOut(workers: Int, units: Int)(body: Int => Unit): Unit = {
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val left = new java.util.concurrent.CountDownLatch(units)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def work(): Unit = {
+      var u = next.getAndIncrement()
+      while (u < units) {
+        try body(u)
+        catch { case t: Throwable => failure.compareAndSet(null, t) }
+        finally left.countDown()
+        u = next.getAndIncrement()
+      }
+    }
+    var h = 1
+    while (h < workers) {
+      scala.concurrent.ExecutionContext.global.execute(() => work())
+      h += 1
+    }
+    work()
+    left.await()
+    if (failure.get != null) throw failure.get
+  }
 
   /** Load a saved store's model and pin the requested cells' code
     * arrays driver-side (all cells when `cells` is empty — tests and

@@ -57,6 +57,32 @@ class LocalServeSpec extends AnyFunSuite {
     }
   }
 
+  test("every probe block of the table prep, nprobe = 1 to P, matches " +
+      "AnnQuery.topK (pinned and inline)") {
+    // P = 9 cells: nprobe 1 is the lone-probe kernel, 2-4 the repeated
+    // 5-block, 5 one full block, 6-9 a block plus each tail; C = 32
+    // codes fill whole code vectors in both kernels
+    val cfg = IvfPqConfig(numPartitions = 9, numDivisions = 4,
+      numCodes = 32, maxIter = 10)
+    val (m9, enc9) = IvfPqBuilder.fit(df, "id", "vec", dim, cfg)
+    val codes = enc9.select("id", "partition", "codes").localCheckpoint()
+    val serve = LocalServe.fromCodes(m9, codes)
+    val inline = serve.withInlineCompute
+    for {
+      qid <- Seq(3L, 171L)
+      nprobe <- 1 to cfg.numPartitions
+    } {
+      val q = data.find(_._1 == qid).get._2.map(_.toDouble).toArray
+      val cluster = AnnQuery.topK(codes, m9, q, 10, nprobe)
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+      assert(serve.query(q, 10, nprobe).toSeq === cluster.toSeq,
+        s"mismatch at qid=$qid nprobe=$nprobe")
+      assert(inline.query(q, 10, nprobe).toSeq === cluster.toSeq,
+        s"inline mismatch at qid=$qid nprobe=$nprobe")
+    }
+  }
+
   test("cell-subset residency: resident probes serve, missing cells throw") {
     val serve2 = LocalServe.fromStore(spark, storeDir, cells = Seq(0, 1))
     assert(serve2.cells === Seq(0, 1))
