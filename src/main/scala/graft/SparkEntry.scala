@@ -1598,8 +1598,8 @@ object SparkEntry {
     //  - the PRODUCTION composition — selectivity-aware nprobe (probe
     //    budget scaled by 1/selectivity, capped at P: label=3 keeps ~1/4
     //    of rows → 16 → 8) + exact re-rank of the ADC top-30 — gated at
-    //    recall ≥ 8/10 (measured 10/10 at both sf0.01 and sf0.1 with
-    //    FilteredAnnProbe; ADC ranking error collapses to candidate
+    //    recall ≥ 8/10 (measured 10/10 at both sf0.01 and sf0.1,
+    //    BENCH_NOTES; ADC ranking error collapses to candidate
     //    error, so only a true neighbor missing the ADC top-30 is lost)
     "ann_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)

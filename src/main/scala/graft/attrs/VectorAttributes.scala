@@ -1,6 +1,6 @@
 package graft.attrs
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,9 +17,12 @@ import org.apache.spark.sql.types._
   * [[AttributesLog]] — the same replay the reference performs over its
   * `OperationSetAttribute` entries (protos/database.proto:96-115).
   *
-  * Scale notes: appends never rewrite existing data (one new parquet
-  * batch per set); gets filter on `name` FIRST so parquet predicate
-  * pushdown skips other attributes' row groups before the single
+  * Scale notes: appends never rewrite existing data; a set that fits
+  * one read split lands as ONE new parquet file
+  * ([[graft.index.StoreLifecycle.appendBatch]]), so the log grows by a
+  * file per set, not by a file per input split of the set; gets
+  * filter on `name` FIRST so parquet predicate pushdown skips other
+  * attributes' row groups before the single
   * (vector_id, name) shuffle of the LWW window; per-hit fetches
   * ([[getAttributeFor]]) semi-join the log down to k ids before
   * resolving, the analogue of the reference loading only hit
@@ -55,10 +58,11 @@ object VectorAttributes {
     val spark = entries.sparkSession
     val nextSeq = log(spark, indexPath)
       .agg(coalesce(max("seq"), lit(-1L))).head().getLong(0) + 1
-    entries.select(col("vector_id").cast("long"), col("name").cast("string"),
+    graft.index.StoreLifecycle.appendBatch(
+      entries.select(col("vector_id").cast("long"), col("name").cast("string"),
         col("value_str").cast("string"), col("value_u64").cast("long"),
-        lit(nextSeq).as("seq"))
-      .write.mode(SaveMode.Append).parquet(attrsPath(indexPath))
+        lit(nextSeq).as("seq")),
+      attrsPath(indexPath))
   }
 
   /** Set a string attribute for every row of `kv(idCol, valueCol)`. */

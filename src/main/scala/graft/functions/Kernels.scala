@@ -662,7 +662,7 @@ object Kernels {
     * The hot argmin/dot loops previously read these tables through
     * `ArrayData.getDouble` — an Unsafe load C2 will not
     * auto-vectorize; against a plain `Array[Double]` the same scalar
-    * blocked loops run 1.5-2.1× faster (Round14AccessorProbe, both
+    * blocked loops run 1.5-2.1× faster (OPTIMIZATION_r14.md §5, both
     * assignment shapes, identical results bit for bit — the loop is
     * unchanged, only the load). A plan literal is one object reused
     * for every row of a stage, so the copy amortizes to zero.

@@ -199,7 +199,6 @@ object BinaryQuant {
     * Stores saved before the fingerprint existed validate shape only. */
   def appendToStore(thresholds: Array[Double], df: DataFrame,
                     idCol: String, vecCol: String, path: String): Unit = {
-    import org.apache.spark.sql.SaveMode
     val manifestStr =
       IvfPqBuilder.readVerifiedManifest(df.sparkSession, path)
     val dim = "\"vector_size\"\\s*:\\s*(\\d+)".r
@@ -215,8 +214,8 @@ object BinaryQuant {
             "(fingerprint mismatch) — a same-dim mismatch would silently " +
             "corrupt Hamming rankings")
       }
-    signatures(df, idCol, vecCol, thresholds)
-      .write.mode(SaveMode.Append).parquet(s"$path/codes")
+    StoreLifecycle.appendBatch(signatures(df, idCol, vecCol, thresholds),
+      s"$path/codes")
   }
 
   /** Append-only DELETE — the shared tombstone log. */

@@ -201,9 +201,10 @@ object IvfPqBuilder {
     // in the shared local-mode heap while the fit threads ran — the
     // measured cause of the 1M pq-kmeans-all inflation (80.9 s with the
     // relation resident vs 47.6 s fits-first at n=1M, same 65,536-row
-    // sample; 100k fits read ~29 s in both orders — Round13 probe,
-    // BENCH_NOTES). On a real cluster driver and executors are separate
-    // JVMs, but fits-first is strictly better locally and free remotely.
+    // sample; 100k fits read ~29 s in both orders — BENCH_NOTES,
+    // "Round 13: pq-kmeans-all inflation"). On a real cluster driver
+    // and executors are separate JVMs, but fits-first is strictly
+    // better locally and free remotely.
     val flatCentLit = litDoubles(centroids.flatten)
     // localCheckpoint, not cache(): the stage itself costs the same
     // (the write is bandwidth-bound either way at 1M×1536), but raw
@@ -248,11 +249,12 @@ object IvfPqBuilder {
   }
 
   /** Append freshly encoded vectors to a stored index's codes table —
-    * one new parquet file set under the affected partition directories;
-    * nothing existing is rewritten (the same append-only discipline as
-    * the attribute log). The per-cell stats sidecar is maintained but no
-    * drift report is computed — use the `log`-taking overload for
-    * telemetry. */
+    * one new parquet file per touched cell directory (a populous cell
+    * salts across several, [[StoreLifecycle.writeCellAligned]]); nothing
+    * existing is rewritten (the same append-only discipline as the
+    * attribute log). An empty batch changes nothing on disk. The
+    * per-cell stats sidecar is maintained but no drift report is
+    * computed — use the `log`-taking overload for telemetry. */
   def appendToStore(model: IvfPqModel, df: DataFrame, idCol: String,
                     vecCol: String, path: String): Unit =
     appendToStoreImpl(model, df, idCol, vecCol, path, None)
@@ -278,76 +280,26 @@ object IvfPqBuilder {
   private def appendToStoreImpl(model: IvfPqModel, df: DataFrame,
                                 idCol: String, vecCol: String, path: String,
                                 log: Option[String => Unit]): Unit =
-    // backward compat + placeholder handling live in appendEncoded; the
-    // only family-specific step is encoding against the frozen model
-    appendEncoded(df.sparkSession, encode(model, df, idCol, vecCol),
+    StoreLifecycle.appendPartitioned(
+      encode(model, df, idCol, vecCol).select("id", "partition", "codes"),
       path, model.config.numPartitions, log)
-
-  /** Append PRE-ENCODED rows (id, partition, codes) to a store — the
-    * codec-agnostic tail of [[appendToStore]], shared with the OPQ
-    * family whose encode path differs (learned rotation,
-    * [[OpqBuilder.appendToStore]]) but whose store layout is this one.
-    * Handles the same placeholder/stats bookkeeping as the IVF+PQ
-    * append; callers own encoding against their FROZEN model. */
-  private[index] def appendEncoded(spark: SparkSession, enc0: DataFrame,
-                                   path: String, numPartitions: Int,
-                                   log: Option[String => Unit]): Unit = {
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsPath)) {
-      log.foreach(_("append-drift: no stats sidecar — backfilling the " +
-        "histogram from the existing codes table (one-time scan)"))
-      writeStats(spark.read.parquet(s"$path/codes"), path, SaveMode.Overwrite)
-    }
-    removeEmptyPlaceholder(spark, path)
-    val enc = enc0.select("id", "partition", "codes").persist()
-    try {
-      enc.write.mode(SaveMode.Append).partitionBy("partition")
-        .parquet(s"$path/codes")
-      writeStats(enc, path, SaveMode.Append)
-      log.foreach(reportDrift(spark, path, numPartitions, _))
-    } finally enc.unpersist()
-  }
-
-  /** Remove the zero-row UNPARTITIONED placeholder a fully-tombstoned
-    * compaction installs at codes/ root (see [[compactStore]]) — a
-    * partitioned append into that directory would produce the mixed
-    * file layout Spark's partition discovery rejects. The placeholder
-    * carries no rows by construction; verified before touching
-    * anything. Shared by every cell-partitioned family's append. */
-  private[index] def removeEmptyPlaceholder(spark: SparkSession,
-                                            path: String): Unit = {
-    val codesRoot = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(codesRoot)) {
-      val rootFiles = fs.listStatus(codesRoot).filter(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
-      if (rootFiles.nonEmpty) {
-        require(spark.read.parquet(s"$path/codes").isEmpty,
-          s"$path/codes holds root-level parquet files WITH rows — not a " +
-            "layout this store writes; refusing to append into it")
-        rootFiles.foreach(st => fs.delete(st.getPath, false))
-      }
-    }
-  }
 
   /** Cells whose cumulative population exceeds this multiple of the mean
     * trigger the rebalance recommendation in [[appendToStore]]'s log. */
   val driftImbalanceThreshold: Double = 4.0
 
-  private[index] def writeStats(enc: DataFrame, path: String,
-                         mode: SaveMode): Unit = {
-    // the histogram AGGREGATION stays distributed (enc is corpus-sized);
-    // only the P-row result lands via the driver-local writer — no
-    // write-job + commit round-trip for a KB sidecar
-    val rows = enc.groupBy("partition").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1))).toSeq
-    writeStatRows(enc.sparkSession, path, rows, mode)
-  }
+  // the histogram AGGREGATION stays distributed (codes are corpus-sized);
+  // only the P-row result lands via the driver-local writer — no
+  // write-job + commit round-trip for a KB sidecar
+  private[index] def writeStats(codes: DataFrame, path: String,
+                         mode: SaveMode): Unit =
+    writeStatRows(codes.sparkSession, path,
+      StoreLifecycle.cellCounts(codes), mode)
 
   private[index] def writeStatRows(spark: SparkSession, path: String,
-      rows: Seq[Seq[Any]], mode: SaveMode): Unit = {
+      counts: Seq[(Int, Long)], mode: SaveMode): Unit = {
     val cols = Seq("partition" -> MetaIO.IntT, "cnt" -> MetaIO.LongT)
+    val rows = counts.map { case (p, c) => Seq[Any](p, c) }
     if (mode == SaveMode.Append)
       MetaIO.append(hconf(spark), s"$path/stats", cols, rows)
     else
@@ -452,15 +404,14 @@ object IvfPqBuilder {
     // the per-cell histogram is collected FIRST (it seeds the stats
     // sidecar below anyway) so the cell-aligned write can salt populous
     // cells across writer tasks instead of serializing them into one
-    val statRows = encoded.groupBy("partition").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1))).toSeq
+    val statRows = StoreLifecycle.cellCounts(encoded)
     // cell-aligned write (the compaction rewrite's shape): without the
     // repartition every input split writes its own file into every cell
     // dir it touches — up to splits × P files for the base build —
     // which costs commit time now and listing + open overhead on every
     // later load (guide: output files sized by layout, not by accident)
     StoreLifecycle.writeCellAligned(encoded.select("id", "partition", "codes"),
-      s"$path/codes", statRows.map(_(1).asInstanceOf[Long]))
+      s"$path/codes", statRows.map(_._2), SaveMode.Overwrite)
     // model sidecars (centroids/codebooks) are driver-resident KBs —
     // written with the driver-local parquet writer ([[MetaIO]]): same
     // files, no Spark job + commit round-trip per table (round-14 job
@@ -621,7 +572,7 @@ object IvfPqBuilder {
 
   /** MAINTENANCE COMPACTION — the step that keeps the append-then-
     * tombstone discipline honest: a year of daily [[appendToStore]]
-    * batches grows one file set per append per touched cell, and
+    * batches grows one file per append per touched cell, and
     * [[deleteFromStore]] tombstones accumulate into an ever-larger
     * anti-join side. Compaction folds both back to the minimal layout:
     * read the LIVE rows (codes minus tombstones), rewrite ONE compacted
@@ -650,10 +601,8 @@ object IvfPqBuilder {
     // is resetting the drift-telemetry sidecar to the live histogram it
     // returns (collected BEFORE the swap — reading the new table after
     // the swap would crash on a zero-row store)
-    val statRows = StoreLifecycle.compactPartitioned(spark, path, live)
     writeStatRows(spark, path,
-      statRows.map { case (p, c) => Seq[Any](p, c) },
-      SaveMode.Overwrite)
+      StoreLifecycle.compactPartitioned(spark, path, live), SaveMode.Overwrite)
   }
 
   /** Re-fit + re-encode a DRIFTED store from its own contents into a
@@ -869,9 +818,7 @@ object IvfPqBuilder {
       if (refresh.contains(i)) i -> newCellCounts.getOrElse(i, 0L)
       else i -> sideMap.getOrElse(i, 0L)
     }.filter(_._2 > 0L)
-    writeStatRows(spark, path,
-      statRows.map { case (pt, c) => Seq[Any](pt, c) },
-      SaveMode.Overwrite)
+    writeStatRows(spark, path, statRows, SaveMode.Overwrite)
     log(s"rebalance-partial: rewrote ${refresh.size} of $p cell dirs " +
       s"in place; centroids + stats refreshed")
     (newModel, refresh)

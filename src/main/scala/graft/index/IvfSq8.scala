@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.functions.FastFunctions._
@@ -91,16 +91,13 @@ object IvfSq8 {
     * (the ann_ivfsq8_stored invariant). */
   def save(model: IvfSq8Model, encoded: DataFrame, path: String): Unit = {
     val spark = encoded.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.SaveMode
     // histogram first (it seeds the stats sidecar anyway) so the
     // cell-aligned write can salt populous cells (IvfPqBuilder.save)
-    val statRows = encoded.groupBy("partition").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1))).toSeq
+    val statRows = StoreLifecycle.cellCounts(encoded)
     // cell-aligned write — one file per cell (the IvfPqBuilder.save
     // rationale)
     StoreLifecycle.writeCellAligned(encoded.select("id", "partition", "sq8"),
-      s"$path/codes", statRows.map(_(1).asInstanceOf[Long]))
+      s"$path/codes", statRows.map(_._2), SaveMode.Overwrite)
     IvfPqBuilder.writeCentroids(spark, path, model.partitionCentroids)
     MetaIO.write(spark.sparkContext.hadoopConfiguration, s"$path/codec",
       Seq("mins" -> MetaIO.DoublesT, "scales" -> MetaIO.DoublesT),
@@ -112,8 +109,7 @@ object IvfSq8 {
       IvfPqBuilder.sha256Hex(manifest))
     // seed the drift-telemetry sidecar (the IVF+PQ discipline): appends
     // against the frozen model report cumulative cell imbalance from it
-    IvfPqBuilder.writeStatRows(spark, path, statRows,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    IvfPqBuilder.writeStatRows(spark, path, statRows, SaveMode.Overwrite)
   }
 
   /** Load an IVF+SQ8 store; validates centroid/codec shapes against the
@@ -158,7 +154,8 @@ object IvfSq8 {
     * codebook-preserving partial repair, the byte codec itself drifts). */
   def appendToStore(model: IvfSq8Model, df: DataFrame, idCol: String,
                     vecCol: String, path: String): Unit =
-    appendImpl(model, df, idCol, vecCol, path, None)
+    StoreLifecycle.appendPartitioned(encode(model, df, idCol, vecCol), path,
+      model.numPartitions, None)
 
   /** As the 5-arg [[appendToStore]], with the drift report delivered to
     * `log` (the sidecar read + collect runs only when someone listens —
@@ -166,31 +163,8 @@ object IvfSq8 {
   def appendToStore(model: IvfSq8Model, df: DataFrame, idCol: String,
                     vecCol: String, path: String,
                     log: String => Unit): Unit =
-    appendImpl(model, df, idCol, vecCol, path, Some(log))
-
-  private def appendImpl(model: IvfSq8Model, df: DataFrame, idCol: String,
-                         vecCol: String, path: String,
-                         log: Option[String => Unit]): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val spark = df.sparkSession
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsPath)) {
-      log.foreach(_("append-drift: no stats sidecar — backfilling the " +
-        "histogram from the existing codes table (one-time scan)"))
-      IvfPqBuilder.writeStats(spark.read.parquet(s"$path/codes"), path,
-        SaveMode.Overwrite)
-    }
-    IvfPqBuilder.removeEmptyPlaceholder(spark, path)
-    val enc = encode(model, df, idCol, vecCol).persist()
-    try {
-      enc.write.mode(SaveMode.Append).partitionBy("partition")
-        .parquet(s"$path/codes")
-      IvfPqBuilder.writeStats(enc, path, SaveMode.Append)
-      log.foreach(IvfPqBuilder.reportDrift(spark, path,
-        model.numPartitions, _))
-    } finally enc.unpersist()
-  }
+    StoreLifecycle.appendPartitioned(encode(model, df, idCol, vecCol), path,
+      model.numPartitions, Some(log))
 
   /** Append-only DELETE — the shared tombstone log. */
   def deleteFromStore(storePath: String, ids: DataFrame,
@@ -205,11 +179,9 @@ object IvfSq8 {
                    path: String): Unit = {
     import spark.implicits._
     val (_, live) = load(spark, path)
-    val statRows = StoreLifecycle.compactPartitioned(spark, path,
-      live.select("id", "partition", "sq8"))
     IvfPqBuilder.writeStatRows(spark, path,
-      statRows.map { case (p, c) => Seq[Any](p, c) },
-      org.apache.spark.sql.SaveMode.Overwrite)
+      StoreLifecycle.compactPartitioned(spark, path,
+        live.select("id", "partition", "sq8")), SaveMode.Overwrite)
   }
 
   /** Selected cells: (partition id, localized query q − centroid), by

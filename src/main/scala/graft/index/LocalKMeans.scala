@@ -410,7 +410,7 @@ object LocalKMeans {
     * 29.4 s vs overlap-4 16.6 s = 1.77× on the uniform bench corpus,
     * 1.53× on blobs, outputs BIT-IDENTICAL in both (each body is a pure
     * function of its index: per-division seed, range-ordered partial
-    * merges; Round14FitOverlapProbe keeps the A/B runnable). Workers
+    * merges; BENCH_NOTES "Round 14: PQ-fit overlap" has the A/B). Workers
     * pull indices from a counter, results keep index order; the first
     * body failure cancels the remaining pulls and rethrows. */
   private[index] def overlapIndexed[T: scala.reflect.ClassTag](

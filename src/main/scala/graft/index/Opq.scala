@@ -564,9 +564,9 @@ object OpqBuilder {
   def appendToStore(model: OpqModel, df: DataFrame, idCol: String,
                     vecCol: String, path: String,
                     log: String => Unit = _ => ()): Unit =
-    IvfPqBuilder.appendEncoded(df.sparkSession,
-      encode(model, df, idCol, vecCol), path,
-      model.ivf.config.numPartitions, Some(log))
+    StoreLifecycle.appendPartitioned(
+      encode(model, df, idCol, vecCol).select("id", "partition", "codes"),
+      path, model.ivf.config.numPartitions, Some(log))
 
   /** Append-only DELETE for an OPQ store — the shared tombstone log
     * ([[graft.index.StoreLifecycle.deleteFromStore]]); [[load]] (via the
@@ -587,7 +587,7 @@ object OpqBuilder {
   /** Re-fit + re-encode a DRIFTED OPQ store from its own contents into
     * a NEW store at `outPath` — the repair the append-drift REBALANCE
     * recommendation points at (OPQ appends share
-    * [[IvfPqBuilder.appendEncoded]]'s telemetry, so they emit the same
+    * [[StoreLifecycle.appendPartitioned]]'s telemetry, so they emit the same
     * recommendation; until round 12 only the plain family had the
     * repair). The training corpus is the store's own reconstructions:
     * the stored code decodes in ROTATED residual space (zero-centroid

@@ -113,11 +113,9 @@ object Sq8 {
     * lifecycle ([[StoreLifecycle]]); no drift sidecar — the codec has no
     * cell histogram to drift. */
   def appendToStore(model: Sq8Model, df: DataFrame, idCol: String,
-                    vecCol: String, path: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    encode(model, df, idCol, vecCol)
-      .write.mode(SaveMode.Append).parquet(s"$path/codes")
-  }
+                    vecCol: String, path: String): Unit =
+    StoreLifecycle.appendBatch(encode(model, df, idCol, vecCol),
+      s"$path/codes")
 
   /** Append-only DELETE — the shared tombstone log; [[load]] anti-joins
     * dead ids out. Idempotent. */

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * scales like the TF-IDF / LM-fit family it sits next to.
   *
   * Scoring shape (the load-bearing choice, measured at 1M docs,
-  * tools.TextScaleProbe): the per-label counts PIVOT into one score
-  * ARRAY per vocabulary token, so the test token stream joins the
+  * BENCH_NOTES "Text-family 1M-doc scale probe"): the per-label
+  * counts PIVOT into one score ARRAY per vocabulary token, so the test
+  * token stream joins the
   * vocabulary table ONCE — never multiplied ×|labels| before an
   * exchange — and per-label sums are |labels| columns of a single
   * map-side-combining doc-keyed aggregate (the exchange carries one

@@ -1370,7 +1370,8 @@ object TrainingData {
       .agg(coalesce(sum("c_t"), lit(0L)).as("t_t"),
         coalesce(sum("c_r"), lit(0L)).as("t_r"),
         count(lit(1)).as("v"))
-    // plan-shape note (measured, tools.TextScaleProbe at 1M docs): the
+    // plan-shape note (measured at 1M docs, BENCH_NOTES "Text-family
+    // 1M-doc scale probe"): the
     // tempting "merge both counts into one precomputed per-token score
     // relation" variant is ~4× SLOWER — the two simple count aggregates
     // each broadcast cleanly under AQE, while the merged full-join

@@ -12,8 +12,8 @@ import graft.index.{IvfPqModel, Sq8Model}
   * knob into a measured decision. The reference (and every IVF engine)
   * leaves nprobe to the operator; in production the question is always
   * "what's the smallest nprobe that reaches recall R?" — answered here
-  * by an operator, not a hand-run probe script (which is what
-  * tools/FilteredAnnProbe.scala hand-rolled before this existed).
+  * by an operator, not a hand-run probe script (BENCH_NOTES records
+  * the hand-rolled filtered-ANN sweeps this replaces).
   *
   * The whole nprobe-recall CURVE comes from ONE distributed pass, not a
   * per-nprobe rerun, via the probe-rank identity: for a query q and its

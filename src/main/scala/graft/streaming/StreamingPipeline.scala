@@ -132,8 +132,8 @@ object StreamingPipeline {
     * one-row threshold, and the split is two comparisons against it.
     * The previous form ranked the whole pool in a SINGLE-partition
     * window — bounded by the trigger size by contract, but the
-    * pipeline's only single-task stage (Round14ReorderProbe measures
-    * the two forms against each other at growing trigger sizes).
+    * pipeline's only single-task stage (BENCH_NOTES "Round 14: reorder
+    * pre-stage" measures the two forms at growing trigger sizes).
     * doc_ids are unique (the ingest contract), so the threshold split
     * is exact and its outputs identical to the ranked form's. */
   def reorderBatch(batch: DataFrame, held: DataFrame, w: Int)

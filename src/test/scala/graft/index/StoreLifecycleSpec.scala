@@ -1,6 +1,7 @@
 package graft.index
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -11,7 +12,7 @@ import graft.TestSpark
   * prove answer-level bit-equality at sf scale; this spec covers the
   * lifecycle edge cases the gates don't reach: idempotent re-delete,
   * fully-tombstoned compaction, append into a compacted-empty store,
-  * and double compaction. */
+  * double compaction, and the file layout every append leaves behind. */
 class StoreLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -26,6 +27,25 @@ class StoreLifecycleSpec extends AnyFunSuite {
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def files(path: String): Long =
+    IvfPqBuilder.parquetFileCount(spark, path)
+
+  private val pqConfig = IvfPqConfig(numPartitions = 4, numDivisions = 4,
+    numCodes = 16, maxIter = 10)
+
+  /** Runs `append` and checks the cell-partitioned append layout: the
+    * codes table gains exactly one file per cell the batch touches (its
+    * rows arrive from several input splits), and the stats sidecar still
+    * reconciles with the codes table. */
+  private def checkAppendLayout(path: String, encodedBatch: DataFrame)(
+      append: => Unit): Unit = {
+    val touched = encodedBatch.select("partition").distinct().count()
+    val before = files(s"$path/codes")
+    append
+    assert(files(s"$path/codes") === before + touched)
+    assert(!IvfPqBuilder.reconcileStats(spark, path))
+  }
 
   // ---------------------------------------------------------- SQ8 (flat)
 
@@ -247,5 +267,110 @@ class StoreLifecycleSpec extends AnyFunSuite {
       .agg(sum(col("cnt"))).head().getLong(0)
     assert(postTotal === 1060L)
     assert(IvfSq8.load(spark, path)._2.count() === 1060L)
+  }
+
+  // ------------------------------------------------------ append layout
+
+  test("IVF+PQ, OPQ and IVF+SQ8: an append adds one codes file per " +
+       "touched cell and the stats sidecar still reconciles") {
+    val df = vecs(96, 11L).toDF("id", "vec")
+    val base = df.where(col("id") < 48)
+    val batch = df.where(col("id") >= 48).repartition(4)
+
+    val (pq, _) = IvfPqBuilder.fit(df, "id", "vec", dim, pqConfig)
+    val pqPath = tmpDir("pq_layout")
+    IvfPqBuilder.save(pq, IvfPqBuilder.encode(pq, base, "id", "vec"), pqPath)
+    checkAppendLayout(pqPath, IvfPqBuilder.encode(pq, batch, "id", "vec")) {
+      IvfPqBuilder.appendToStore(pq, batch, "id", "vec", pqPath)
+    }
+    assert(IvfPqBuilder.load(spark, pqPath)._2.count() === 96L)
+
+    val (opq, _) = OpqBuilder.fit(df, "id", "vec", dim, pqConfig, opqIters = 2)
+    val opqPath = tmpDir("opq_layout")
+    OpqBuilder.save(opq, OpqBuilder.encode(opq, base, "id", "vec"), opqPath)
+    checkAppendLayout(opqPath, OpqBuilder.encode(opq, batch, "id", "vec")) {
+      OpqBuilder.appendToStore(opq, batch, "id", "vec", opqPath)
+    }
+    assert(OpqBuilder.load(spark, opqPath)._2.count() === 96L)
+
+    val (sq, _) = IvfSq8.fit(df, "id", "vec", dim, numPartitions = 4)
+    val sqPath = tmpDir("ivfsq8_layout")
+    IvfSq8.save(sq, IvfSq8.encode(sq, base, "id", "vec"), sqPath)
+    checkAppendLayout(sqPath, IvfSq8.encode(sq, batch, "id", "vec")) {
+      IvfSq8.appendToStore(sq, batch, "id", "vec", sqPath)
+    }
+    assert(IvfSq8.load(spark, sqPath)._2.count() === 96L)
+  }
+
+  test("an empty append leaves a compacted-empty store loadable " +
+       "(IVF+PQ and IVF+SQ8)") {
+    val df = vecs(40, 12L).toDF("id", "vec")
+    val empty = df.where(lit(false))
+
+    val (pq, enc) = IvfPqBuilder.fit(df, "id", "vec", dim, pqConfig)
+    val pqPath = tmpDir("pq_empty_append")
+    IvfPqBuilder.save(pq, enc, pqPath)
+    IvfPqBuilder.deleteFromStore(pqPath, df.select("id"), "id")
+    IvfPqBuilder.compactStore(spark, pqPath)
+    IvfPqBuilder.appendToStore(pq, empty, "id", "vec", pqPath)
+    assert(IvfPqBuilder.load(spark, pqPath)._2.count() === 0L)
+    IvfPqBuilder.appendToStore(pq, df.where(col("id") < 5), "id", "vec", pqPath)
+    assert(IvfPqBuilder.load(spark, pqPath)._2.count() === 5L)
+
+    val (sq, sqEnc) = IvfSq8.fit(df, "id", "vec", dim, numPartitions = 2)
+    val sqPath = tmpDir("ivfsq8_empty_append")
+    IvfSq8.save(sq, sqEnc, sqPath)
+    IvfSq8.deleteFromStore(sqPath, df.select("id"), "id")
+    IvfSq8.compactStore(spark, sqPath)
+    IvfSq8.appendToStore(sq, empty, "id", "vec", sqPath)
+    assert(IvfSq8.load(spark, sqPath)._2.count() === 0L)
+    IvfSq8.appendToStore(sq, df.where(col("id") < 5), "id", "vec", sqPath)
+    assert(IvfSq8.load(spark, sqPath)._2.count() === 5L)
+  }
+
+  test("a small tombstone batch and a small attribute set each add " +
+       "exactly one parquet file") {
+    val path = tmpDir("log_layout")
+    val ids = spark.range(0L, 200L, 1L, 4).toDF("id")
+    StoreLifecycle.deleteFromStore(path, ids, "id")
+    assert(files(s"$path/tombstones") === 1L)
+    StoreLifecycle.deleteFromStore(path, ids, "id")
+    assert(files(s"$path/tombstones") === 2L)
+    val kv = ids.select(col("id"), (col("id") * 3).as("v"))
+    graft.attrs.VectorAttributes.setU64Attribute(path, kv, "id", "u", "v")
+    assert(files(s"$path/attrs") === 1L)
+    graft.attrs.VectorAttributes.setU64Attribute(path, kv, "id", "u", "v")
+    assert(files(s"$path/attrs") === 2L)
+    assert(graft.attrs.VectorAttributes.getAttribute(spark, path, "u")
+      .count() === 200L)
+  }
+
+  test("writeCellAligned in Append mode salts a populous cell across " +
+       "writer tasks and keeps the files already there") {
+    // a session of its own with AQE coalescing off: at test sizes AQE
+    // would fold every salted shuffle partition back into one task
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val rows = (0L until 130L).map(i => (i, if (i < 120) 0 else 1, Seq(1, 2)))
+    val df = s2.createDataFrame(rows).toDF("id", "partition", "codes")
+    val dest = tmpDir("salted_append") + "/codes"
+    StoreLifecycle.writeCellAligned(df, dest, Seq(120L, 10L),
+      org.apache.spark.sql.SaveMode.Overwrite)
+    def cellFiles(cell: Int): Set[java.io.File] =
+      new java.io.File(s"$dest/partition=$cell").listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSet
+    val (old0, old1) = (cellFiles(0), cellFiles(1))
+    assert(old0.size === 1 && old1.size === 1)
+    val rowsPerFile = 30L
+    StoreLifecycle.writeCellAligned(df, dest, Seq(120L, 10L),
+      org.apache.spark.sql.SaveMode.Append, rowsPerFile)
+    assert(old0.subsetOf(cellFiles(0)) && old1.subsetOf(cellFiles(1)))
+    val added = cellFiles(0) -- old0
+    assert(added.size >= 4) // ceil(120 / 30)
+    added.foreach(f =>
+      assert(s2.read.parquet(f.getPath).count() <= rowsPerFile))
+    val tasks = added.map(_.getName.split("-")(1))
+    assert(tasks.size > 1, s"populous cell written by one task: $added")
+    assert(s2.read.parquet(dest).count() === 260L)
   }
 }
