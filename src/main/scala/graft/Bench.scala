@@ -69,12 +69,14 @@ object Bench {
       // scale regression canary (10× the rows through the same
       // assignment/encode passes — a plan that stops scaling linearly
       // shows up here first, not at sf0.1)
-      // returns (total seconds, per-stage JSON) — the stage breakdown
-      // (collect-train-sample / coarse-kmeans / materialize-residuals /
-      // local-residuals / pq-kmeans-all / encode-materialize) localizes
-      // a build regression to its stage instead of leaving a bare total
-      // to re-bisect (the r7 1M 76.5→89.4 s question)
-      def buildAt(n: Long): (Double, String) = {
+      // returns (total seconds, per-stage JSON, stage-canary JSON) — the
+      // stage breakdown (collect-train-sample / coarse-kmeans /
+      // materialize-residuals / local-residuals / pq-kmeans-all /
+      // encode-materialize) localizes a build regression to its stage
+      // instead of leaving a bare total to re-bisect (the r7 1M
+      // 76.5→89.4 s question). A stage name logged more than once sums
+      // into one key in both objects.
+      def buildAt(n: Long): (Double, String, String) = {
         // localCheckpoint, not cache(): raw rows scan ~3× faster than the
         // columnar cache for wide float arrays (BuildBench measurement)
         val vecs = spark.range(n).repartition(64)
@@ -111,7 +113,7 @@ object Bench {
             System.err.println(s"[build-bench n=$n] $s")
             s match {
               case stageRe(name, sec) =>
-                stages(name) = sec.toDouble
+                stages(name) = stages.getOrElse(name, 0.0) + sec.toDouble
                 boundaries += ((name, System.nanoTime()))
               case _ => ()
             }
@@ -128,28 +130,32 @@ object Bench {
         val snap = doneStages.toArray(Array.empty[(Long, Int, Long)])
           .sortBy(_._1)
         var lo = t0
-        val canary = boundaries.map { case (name, hi) =>
+        val canary = scala.collection.mutable.LinkedHashMap.empty[
+          String, (Long, Double)]
+        boundaries.foreach { case (name, hi) =>
           val in = snap.filter(s => s._1 > lo && s._1 <= hi)
           lo = hi
-          name -> ((in.map(_._2.toLong).sum, in.map(_._3).sum / 1e3))
+          val (tasks, taskSec) = canary.getOrElse(name, (0L, 0.0))
+          canary(name) = (tasks + in.map(_._2.toLong).sum,
+            taskSec + in.map(_._3).sum / 1e3)
         }
-        val canaryJson = canary.map { case (k, (tasks, taskSec)) =>
-          s""""$k":{"tasks":$tasks,"task_sec":$taskSec}"""
-        }.mkString("{", ",", "}")
-        val scaleTag = if (n >= 1000000L) s"${n / 1000000}m" else s"${n / 1000}k"
         // checkpoint blocks (this input + the fit's residuals) free via
         // ContextCleaner once unreachable — the suite's per-run
         // System.gc() sweep collects them before the first entry runs
-        (sec, stages.map { case (k, v) => s"\"" + k + "\":" + v }
-          .mkString("{", ",", "}") +
-          s""","ivfpq_build_${scaleTag}_canary":$canaryJson""")
+        (sec,
+          stages.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"),
+          canary.map { case (k, (tasks, taskSec)) =>
+            s""""$k":{"tasks":$tasks,"task_sec":$taskSec}"""
+          }.mkString("{", ",", "}"))
       }
-      val (sec100k, stages100k) = buildAt(100000L)
-      val (sec1m, stages1m) = buildAt(1000000L)
+      val (sec100k, stages100k, canary100k) = buildAt(100000L)
+      val (sec1m, stages1m, canary1m) = buildAt(1000000L)
       s""","build":{"ivfpq_build_100k_1536":$sec100k,""" +
         s""""ivfpq_build_100k_stages":$stages100k,""" +
+        s""""ivfpq_build_100k_canary":$canary100k,""" +
         s""""ivfpq_build_1m_1536":$sec1m,""" +
-        s""""ivfpq_build_1m_stages":$stages1m,"baseline_sec":906.52}"""
+        s""""ivfpq_build_1m_stages":$stages1m,""" +
+        s""""ivfpq_build_1m_canary":$canary1m,"baseline_sec":906.52}"""
     } else ""
     // shared fixtures (index fit/save, attribute batches) are pipeline
     // stages, not operators — materialize them outside the timed loop so

@@ -3,10 +3,13 @@ package graft.functions
 import jdk.incubator.vector.{ByteVector, DoubleVector, IntVector, VectorOperators, VectorSpecies}
 
 /** Vector-API (JEP 438, public JDK incubator) kernels for the
-  * memory/compute-bound WARM-SERVE paths: the per-query prep of
+  * memory/compute-bound WARM-SERVE paths — the per-query prep of
   * PQ serving (cell selection and ADC tables), the OPQ query rotation
   * and the SQ8 full-dim byte scan (measured priorities in BENCH_NOTES
-  * r11-r12; `perfbench/README.md` names the standing serve metrics).
+  * r11-r12; `perfbench/README.md` names the standing serve metrics) —
+  * and for the BUILD: [[graft.index.LocalKMeans]]'s nearest-centroid
+  * search (every Lloyd round of the coarse and PQ fits, the training
+  * residuals, OPQ's per-division encode) runs on [[centroidDists5]].
   * These kernels vectorize ACROSS OUTPUT ENTRIES with each entry's
   * reduction kept STRICTLY SEQUENTIAL, so every lane computes the exact
   * FP operation sequence of the scalar loop and results are
@@ -25,6 +28,8 @@ import jdk.incubator.vector.{ByteVector, DoubleVector, IntVector, VectorOperator
   *    One codebook pass serves every probe of a block, which is what
   *    makes it fast: the per-probe fold streams the whole codebook set
   *    once per probe.
+  *  - [[centroidDists5]]: the build's twin of the ADC table kernel —
+  *    five points' squared distances to every centroid.
   *  - [[cellDistsExact]]: the query's squared distance to every coarse
   *    centroid, 8 cells per accumulator over a column-major centroid
   *    copy, i ascending — the same fold, so cell choice is unchanged.
@@ -207,6 +212,56 @@ object SimdKernels {
     while (c < numCodes) {
       o0(oo + c) = column(cbT, m, numCodes, c, l0, lo)
       c += 1
+    }
+  }
+
+  /** Squared distances from up to five points to every centroid column:
+    * outs(p)(c) = Σ_{i<dim} (pts(p)(i) − centT(i·stride + c))² for
+    * p < n ≤ 5 and c < stride — the nearest-centroid fold of
+    * [[graft.index.LocalKMeans]], each lane the scalar `d += x·x` in
+    * ascending i (the [[table5]] construction). `centT` is [[cellMajor]]
+    * (stride = centT.length / dim); padded columns come out as ‖p‖². A
+    * short block repeats its last point (identical stores).
+    *
+    * Deliberately NOT [[adcTablesExact]], which computes the same
+    * entries: the build's 1536-long folds, run through the serve kernel,
+    * left C2 compiling it for that profile, and serve-shape table prep
+    * (12 divisions × 128 dims × 256 codes) then ran ~20% slower for the
+    * rest of the JVM (≈93 vs 77 µs for 5 probes on a 4-core AMD EPYC,
+    * AVX-512) — perfbench `reference` `op_p50_ms` +10%. */
+  def centroidDists5(centT: Array[Double], dim: Int,
+                     pts: Array[Array[Double]], outs: Array[Array[Double]],
+                     n: Int): Unit = {
+    val L = SPD.length()
+    val stride = centT.length / dim
+    val l0 = pts(0); val l1 = pts(math.min(1, n - 1))
+    val l2 = pts(math.min(2, n - 1)); val l3 = pts(math.min(3, n - 1))
+    val l4 = pts(math.min(4, n - 1))
+    val o0 = outs(0); val o1 = outs(math.min(1, n - 1))
+    val o2 = outs(math.min(2, n - 1)); val o3 = outs(math.min(3, n - 1))
+    val o4 = outs(math.min(4, n - 1))
+    var c = 0
+    while (c < stride) {
+      var a0 = DoubleVector.zero(SPD); var a1 = a0; var a2 = a0
+      var a3 = a0; var a4 = a0
+      var i = 0
+      while (i < dim) {
+        val v = DoubleVector.fromArray(SPD, centT, i * stride + c)
+        val d0 = DoubleVector.broadcast(SPD, l0(i)).sub(v)
+        a0 = d0.mul(d0).add(a0)
+        val d1 = DoubleVector.broadcast(SPD, l1(i)).sub(v)
+        a1 = d1.mul(d1).add(a1)
+        val d2 = DoubleVector.broadcast(SPD, l2(i)).sub(v)
+        a2 = d2.mul(d2).add(a2)
+        val d3 = DoubleVector.broadcast(SPD, l3(i)).sub(v)
+        a3 = d3.mul(d3).add(a3)
+        val d4 = DoubleVector.broadcast(SPD, l4(i)).sub(v)
+        a4 = d4.mul(d4).add(a4)
+        i += 1
+      }
+      a0.intoArray(o0, c); a1.intoArray(o1, c); a2.intoArray(o2, c)
+      a3.intoArray(o3, c); a4.intoArray(o4, c)
+      c += L
     }
   }
 

@@ -214,35 +214,24 @@ object OpqBuilder {
       }.toArray
       // 3. encode + reconstruct; accumulate M = Σ rᵢ·r̂ᵢᵀ and the objective
       val cbs = codebooks
+      val nearest = cbs.map(new LocalKMeans.Nearest(_))
       val partials = LocalKMeans.parChunks(n) { (s, e) =>
         val mAcc = new Array[Double](dim * dim)
         var obj = 0.0
         val recon = new Array[Double](dim)
+        val best = Array.ofDim[Int](d, e - s)
+        val bestD = Array.ofDim[Double](d, e - s)
+        var dI = 0
+        while (dI < d) {
+          nearest(dI).assign(rotated, s, e, dI * m, best(dI), bestD(dI))
+          dI += 1
+        }
         var i = s
         while (i < e) {
-          val rr = rotated(i)
-          var dI = 0
+          dI = 0
           while (dI < d) {
-            val off = dI * m
-            var bestC = 0
-            var bestD = Double.MaxValue
-            var ci = 0
-            while (ci < c) {
-              val cb = cbs(dI)(ci)
-              var sAcc = 0.0
-              var t = 0
-              while (t < m && sAcc < bestD) {
-                val diff = rr(off + t).toDouble - cb(t)
-                sAcc += diff * diff
-                t += 1
-              }
-              if (sAcc < bestD) { bestD = sAcc; bestC = ci }
-              ci += 1
-            }
-            obj += bestD
-            val cb = cbs(dI)(bestC)
-            var t = 0
-            while (t < m) { recon(off + t) = cb(t); t += 1 }
+            obj += bestD(dI)(i - s)
+            System.arraycopy(cbs(dI)(best(dI)(i - s)), 0, recon, dI * m, m)
             dI += 1
           }
           val orig = residuals(i)

@@ -1,9 +1,21 @@
 package graft.index
 
+import org.scalacheck.{Gen, Prop, Test => SchkTest}
+import org.scalacheck.Prop.forAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.SimdSupport
 
 /** Driver-local k-means invariants — no Spark session needed. */
 class LocalKMeansSpec extends AnyFunSuite {
+
+  private def check(prop: Prop): Unit = {
+    val res = SchkTest.check(
+      SchkTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  private def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
 
   private def blobData(k: Int, perBlob: Int, dim: Int,
                        spread: Double): Array[Array[Float]] = {
@@ -177,6 +189,123 @@ class LocalKMeansSpec extends AnyFunSuite {
       sequential(dI).centroids.indices.foreach { ci =>
         assert(java.util.Arrays.equals(sequential(dI).centroids(ci),
           overlapped(dI).centroids(ci)), s"fit $dI centroid $ci differs")
+      }
+    }
+  }
+
+  /** The first strict minimum over fully computed distances, in the
+    * scalar fold's op order — what both [[LocalKMeans.Nearest]] folds
+    * must return. */
+  private def firstMin(cents: Array[Array[Double]], p: Array[Float],
+                       off: Int): (Int, Double) = {
+    var bc = 0
+    var bd = Double.MaxValue
+    cents.indices.foreach { c =>
+      var d = 0.0
+      cents(c).indices.foreach { j =>
+        val x = p(off + j).toDouble - cents(c)(j); d += x * x
+      }
+      if (d < bd) { bd = d; bc = c }
+    }
+    (bc, bd)
+  }
+
+  test("Nearest: vector and scalar folds pick the same centroid at the " +
+      "same distance bits (k < 8, k % 8 != 0, k = 2; dim 1/8/128; " +
+      "duplicated centroids, points on a centroid, NaN coordinates)") {
+    val shapes = for {
+      k <- Gen.oneOf(Gen.choose(1, 7), Gen.const(2), Gen.const(100),
+        Gen.choose(8, 40))
+      dim <- Gen.oneOf(Gen.oneOf(1, 8, 128), Gen.choose(2, 20))
+      n <- Gen.choose(1, 23) // every 5-point block tail
+      off <- Gen.choose(0, 3)
+      dups <- Gen.choose(0, 3)
+      nan <- Gen.frequency(4 -> 0, 1 -> 1, 1 -> 2) // none/point/centroid
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (k, dim, n, off, dups, nan, seed)
+    check(forAll(shapes) { case (k, dim, n, off, dups, nan, seed) =>
+      val rnd = new scala.util.Random(seed)
+      // magnitudes 1e-3..1e3, so distances round differently per op order;
+      // f32-representable, so a point can sit exactly on a centroid
+      def value() = (rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3))
+        .toFloat
+      val cents = Array.fill(k)(Array.fill(dim)(value().toDouble))
+      (0 until dups).foreach { _ =>
+        cents(rnd.nextInt(k)) = cents(rnd.nextInt(k)).clone()
+      }
+      val points = Array.fill(n) {
+        val row = Array.fill(off + dim + 1)(value())
+        if (rnd.nextInt(3) == 0) // on a (possibly duplicated) centroid
+          cents(rnd.nextInt(k)).map(_.toFloat).copyToArray(row, off)
+        row
+      }
+      if (nan == 1) points(rnd.nextInt(n))(off + rnd.nextInt(dim)) = Float.NaN
+      if (nan == 2) cents(rnd.nextInt(k))(rnd.nextInt(dim)) = Double.NaN
+      val want = points.map(firstMin(cents, _, off))
+      val folds = Seq(false) ++ (if (SimdSupport.available) Seq(true) else Nil)
+      val bad = for {
+        simd <- folds
+        best = new Array[Int](n + 2)
+        bestD = new Array[Double](n + 2)
+        _ = new LocalKMeans.Nearest(cents, simd)
+          .assign(points, 0, n, off, best, bestD)
+        i <- 0 until n
+        if best(i) != want(i)._1 || bits(bestD(i)) != bits(want(i)._2)
+      } yield (simd, i, best(i), bestD(i), want(i))
+      Prop(bad.isEmpty) :| s"k=$k dim=$dim n=$n off=$off dups=$dups " +
+        s"nan=$nan: ${bad.take(3).mkString(", ")}"
+    })
+  }
+
+  test("Nearest: a point equidistant from duplicated centroids gets the " +
+      "lowest index; an all-NaN point gets centroid 0 at Double.MaxValue") {
+    val cents = Array(Array(5.0, 5.0), Array(1.0, 2.0), Array(1.0, 2.0),
+      Array(1.0, 2.0), Array(-3.0, 0.5))
+    val points = Array(Array(1f, 2f), Array(1.5f, 2f), Array(Float.NaN, 0f))
+    val folds = Seq(false) ++ (if (SimdSupport.available) Seq(true) else Nil)
+    folds.foreach { simd =>
+      val best = new Array[Int](3)
+      val bestD = new Array[Double](3)
+      new LocalKMeans.Nearest(cents, simd).assign(points, 0, 3, 0, best, bestD)
+      assert(best.toSeq === Seq(1, 1, 0), s"simd=$simd")
+      assert(bestD.toSeq === Seq(0.0, 0.25, Double.MaxValue), s"simd=$simd")
+    }
+  }
+
+  test("reference shape (4,096 x 1536, P=100, D=12, C=256, 10 rounds): " +
+      "coarse centroids, residuals and 12 codebooks fitted through " +
+      "overlapIndexed are bit-identical between the two folds") {
+    assume(SimdSupport.available,
+      "Vector API unavailable or not 8-lane on this JVM — scalar fold only")
+    val dim = 1536
+    val data = Array.tabulate(4096)(i =>
+      graft.functions.Kernels.pseudoRandomVec(i.toLong, dim, 77L)
+        .toFloatArray())
+    def build(simd: Boolean) = {
+      val coarse = LocalKMeans.fit(data, 100, 10, 1e-6, 77L, "kmeans++", simd)
+      val res = LocalKMeans.assignResiduals(data, coarse.centroids, simd)
+      val books = LocalKMeans.overlapIndexed(12) { dI =>
+        val slice = res.map(r =>
+          java.util.Arrays.copyOfRange(r, dI * 128, (dI + 1) * 128))
+        LocalKMeans.fit(slice, 256, 10, 1e-6, 77L + dI, "random", simd)
+      }
+      (coarse, res, books)
+    }
+    val (vc, vr, vb) = build(simd = true)
+    val (sc, sr, sb) = build(simd = false)
+    assert(vc.iters === sc.iters)
+    (0 until 100).foreach { c =>
+      assert(java.util.Arrays.equals(vc.centroids(c), sc.centroids(c)),
+        s"coarse centroid $c differs")
+    }
+    data.indices.foreach { i =>
+      assert(java.util.Arrays.equals(vr(i), sr(i)), s"residual $i differs")
+    }
+    (0 until 12).foreach { dI =>
+      assert(vb(dI).iters === sb(dI).iters, s"division $dI rounds")
+      (0 until 256).foreach { c =>
+        assert(java.util.Arrays.equals(vb(dI).centroids(c),
+          sb(dI).centroids(c)), s"division $dI code $c differs")
       }
     }
   }
