@@ -1803,9 +1803,9 @@ object SparkEntry {
     // LAZY shard JVM (round 14): the fleet form for a store bigger than
     // the fleet's RAM — a shard server opened through the capped
     // lazy-residency tier (--lazy) starts serving with NOTHING resident,
-    // a ServeRouterLazy warm-up travels as ONE OpPrefetch frame and pins
-    // exactly the shard's assigned cells, and the warmed fleet answers
-    // bit-identically to the cluster query
+    // a ServeRouter warm-up under a static assignment travels as ONE
+    // OpPrefetch frame and pins exactly the shard's assigned cells, and
+    // the warmed fleet answers bit-identically to the cluster query
     "ann_serve_remote_lazy" -> ((s, dir) => {
       val path = storedIndexPath(s, dir)
       val (model, codes) = IvfPqBuilder.load(s, path)
@@ -1816,7 +1816,7 @@ object SparkEntry {
       // a lazy server must have had nothing resident at open
       val emptyAtOpen = remote.cells.isEmpty
       val localLazy = graft.query.LocalServeLazy.fromStore(s, path)
-      val router = graft.query.ServeRouterLazy(model,
+      val router = graft.query.ServeRouter(model,
         Seq(localLazy, remote), c => c % 2)
       router.prefetch(allCells)
       val warmSnap = graft.query.RemoteShards.pq("127.0.0.1",
@@ -1845,7 +1845,7 @@ object SparkEntry {
             .as("prefetch_warmed_assigned"))
     }),
 
-    // SHARDED SQ8 serving (round 13): ServeRouterSq8 over two
+    // SHARDED SQ8 serving (round 13): a ServeRouter over two
     // cell-disjoint LocalServeSq8 shards — bit-identical to the
     // cluster IvfSq8.topK on the same relation
     "ann_sq8_serve_sharded" -> ((s, dir) => {
@@ -1858,7 +1858,7 @@ object SparkEntry {
           single.cells.filter(_ % 2 == 1))
         .map(cs => graft.query.LocalServeSq8.fromCodes(model,
           encoded.where(col("partition").isin(cs: _*))))
-      val router = graft.query.ServeRouterSq8(model, shards)
+      val router = graft.query.ServeRouter(model, shards)
       val checks = Seq(0L, 7L, 23L).flatMap { qid =>
         val q = queryVec(s, dir, qid).map(_.toDouble)
         val cluster = graft.index.IvfSq8

@@ -7,7 +7,8 @@ import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration.Duration
 
 /** Generic lazy-residency state machine shared by every lazy serving
-  * tier ([[LocalServeLazy]], [[LocalServeSq8Lazy]], [[LocalServeRqLazy]])
+  * tier ([[LocalServeLazy]], [[LocalServeSq8Lazy]], [[LocalServeRqLazy]],
+  * each a [[LazyTier]] whose loader is its codec's eager cell loader)
   * — one implementation of pin/evict/concurrency so the families cannot
   * drift (the round-12 tiers duplicated ~60 lines of LRU accounting
   * each, and the shared copy is where the concurrency contract lives).
@@ -75,9 +76,10 @@ final class LazyResidency[P <: AnyRef, S <: AnyRef](
   // the same read — with separate fields a reader could observe the new
   // resident map but the previous delegate (written a moment later) and
   // hand a query a delegate missing its probed cell
-  private final case class Snap(resident: Map[Int, P], bytes: Long,
-                                delegate: S)
-  @volatile private var snap: Snap = Snap(Map.empty, 0L, mkDelegate(Map.empty))
+  private final class Snap(val resident: Map[Int, P], val bytes: Long,
+                           val delegate: S)
+  @volatile private var snap: Snap =
+    new Snap(Map.empty, 0L, mkDelegate(Map.empty))
   @volatile private var coldLoadCount: Long = 0L
 
   /** Cells currently resident (sorted). */
@@ -224,7 +226,7 @@ final class LazyResidency[P <: AnyRef, S <: AnyRef](
                 i += 1
               }
             }
-            snap = Snap(res, bytes, mkDelegate(res))
+            snap = new Snap(res, bytes, mkDelegate(res))
           }
         } catch {
           case e: Throwable =>
@@ -239,4 +241,32 @@ final class LazyResidency[P <: AnyRef, S <: AnyRef](
       null.asInstanceOf[S]
     }
   }
+}
+
+/** The members every lazy serving tier shares, read off its
+  * [[LazyResidency]]; `S` is the eager server each query delegates to. */
+abstract class LazyTier[S <: AnyRef] private[query] (
+    res: LazyResidency[_ <: AnyRef, S]) extends CellHolder {
+
+  /** Cells currently resident. */
+  def cells: Seq[Int] = res.cells
+
+  /** Cold cell loads performed so far (per cell, not per query). */
+  def coldLoads: Long = res.coldLoads
+
+  /** Background warm-up: pin `cells` ahead of traffic through the same
+    * shared-promise load pass a cold query uses (a concurrently queried
+    * cell still loads exactly once), never blocking warm queries; caps
+    * and eviction apply as usual — see [[LazyResidency.prefetch]]. */
+  def prefetch(cells: Seq[Int]): Unit = res.prefetch(cells)
+
+  override private[query] def prefetchCells(cells: Seq[Int]): Unit =
+    prefetch(cells)
+
+  /** Payload bytes currently resident (ids, codes and pinned attrs). */
+  def residentBytes: Long = res.residentBytes
+
+  /** Run `f` on an eager delegate holding every probed cell. */
+  protected def withResident[R](probed: Array[Int])(f: S => R): R =
+    res.withResident(probed)(f)
 }

@@ -31,26 +31,15 @@ import graft.index.{IvfPqBuilder, IvfPqModel}
   */
 final class LocalServe private[query] (
     val model: IvfPqModel,
-    cellIds: Map[Int, Array[Long]],
-    cellCodes: Map[Int, Array[Int]],
-    rotation: Option[Array[Array[Double]]],
-    cellAttrs: Map[Int, Array[Long]] = Map.empty,
-    inlineCompute: Boolean = false) extends PqShard {
+    pinned: Map[Int, PqCell],
+    rotation: Option[Array[Array[Double]]]) extends CellShard {
 
-  /** A view of this server whose per-query prep (rotation + ADC
-    * tables) runs wholly on the calling thread instead of fanning out
-    * over the shared pool (see [[prepare]]). Same arithmetic, same bits
-    * — only the scheduling changes; shares the pinned cell arrays.
-    *
-    * Measured guidance (the r12 A/B in BENCH_NOTES.md): this is NOT a
-    * throughput unlock — at 32 client threads inline ≈ futures for OPQ
-    * and +10% for SQ8, so the OPQ flatten there is aggregate
-    * compute/bandwidth, not pool contention; at low concurrency inline
-    * is slower, because the fan-out parallelizes one query's prep. Use
-    * it only to keep the global pool free for OTHER work on a box that
-    * also runs compute futures, never for latency. */
-  def withInlineCompute: LocalServe =
-    new LocalServe(model, cellIds, cellCodes, rotation, cellAttrs, true)
+  // private[this]: the scan reads plain fields (getfield), no accessors
+  private[this] val cellIds = pinned.view.mapValues(_.ids).toMap
+  private[this] val cellCodes = pinned.view.mapValues(_.codes).toMap
+  // only the cells whose loader pinned attributes (the filtered tier)
+  private[this] val cellAttrs =
+    pinned.collect { case (c, p) if p.attrs != null => c -> p.attrs }
 
   /** Cells resident on this server. */
   def cells: Seq[Int] = cellIds.keys.toSeq.sorted
@@ -175,14 +164,14 @@ final class LocalServe private[query] (
     * every probe's tables for that division, in one pass over its
     * codebook — and the rotation as 128-row units of every probe. Up to
     * min(D, cores) workers claim units: the calling thread and helpers
-    * on the global pool ([[LocalServe.fanOut]]); [[withInlineCompute]]
-    * is the one-worker case. `perfbench` `reference` measures it
-    * (`op_p50_ms`, `query.adc_table_us`, `query.select_partitions_us`). */
+    * on the global pool ([[LocalServe.fanOut]]) — one query's prep in
+    * parallel, which at low concurrency beats a calling-thread-only
+    * prep (the r12 A/B in BENCH_NOTES.md). `perfbench` `reference`
+    * measures it (`op_p50_ms`, `query.adc_table_us`,
+    * `query.select_partitions_us`). */
   private def prepare(probes: Array[(Int, Array[Double])]): Array[Array[Double]] = {
     val d = model.config.numDivisions
-    val workers =
-      if (inlineCompute) 1
-      else math.min(d, Runtime.getRuntime.availableProcessors())
+    val workers = math.min(d, Runtime.getRuntime.availableProcessors())
     val locs = rotation match {
       case None => probes.map(_._2)
       case Some(r) =>
@@ -236,16 +225,16 @@ final class LocalServe private[query] (
   * per pinned vector. */
 final class LocalServeRq private[query] (
     val model: graft.index.Rq.RqModel,
-    lvl1: LocalServe,
-    cellIds: Map[Int, Array[Long]],
-    codes1: Map[Int, Array[Int]],
-    codes2: Map[Int, Array[Int]]) extends RqShard {
+    pinned: Map[Int, RqCell]) extends RqShard {
+
+  private val lvl1 = new LocalServe(model.base,
+    pinned.view.mapValues(c => PqCell(c.ids, c.codes, null)).toMap, None)
 
   /** Cells resident on this server. */
-  def cells: Seq[Int] = cellIds.keys.toSeq.sorted
+  def cells: Seq[Int] = pinned.keys.toSeq.sorted
 
   /** Total resident vectors. */
-  def size: Long = cellIds.valuesIterator.map(_.length.toLong).sum
+  def size: Long = pinned.valuesIterator.map(_.ids.length.toLong).sum
 
   /** Warm refined top-k: (id, sq_dist) ascending by (sq_dist, id) —
     * the exact contract of [[graft.index.Rq.topKRefined]]. */
@@ -284,21 +273,19 @@ final class LocalServeRq private[query] (
     val dim = model.base.dim
     val d1 = model.base.config.numDivisions
     val m1 = dim / d1
-    val c1 = model.base.config.numCodes
     val d2 = model.numDivisions2
     val m2 = dim / d2
-    val c2 = model.numCodes2
     val books1 = model.base.codebooks
     val books2 = model.refineBooks
     val cents = model.base.partitionCentroids
     val qf = q.map(_.toFloat)
     // per-cell row index of each candidate (ids are sorted per cell)
     cands.map { case (id, cell, lvl1Dist) =>
-      val ids = cellIds(cell)
-      val r = java.util.Arrays.binarySearch(ids, id)
+      val pin = pinned(cell)
+      val r = java.util.Arrays.binarySearch(pin.ids, id)
       require(r >= 0, s"candidate $id missing from its cell $cell")
-      val k1 = codes1(cell)
-      val k2 = codes2(cell)
+      val k1 = pin.codes
+      val k2 = pin.codes2
       val cent = cents(cell)
       var s = 0.0
       var i = 0
@@ -325,35 +312,29 @@ object LocalServeRq {
     * [[graft.index.Rq.fitRefine]]/load return) — callers prune to this
     * box's cells FIRST, the shared residency contract. */
   def fromCodes(model: graft.index.Rq.RqModel,
-                encoded2: org.apache.spark.sql.DataFrame): LocalServeRq = {
+                encoded2: org.apache.spark.sql.DataFrame): LocalServeRq =
+    new LocalServeRq(model, loadCells(model, encoded2, Seq.empty))
+
+  /** The RQ cell loader, shared by the eager pin and [[LocalServeRqLazy]]:
+    * each cell's id-sorted rows packed into both row-major code layers. */
+  private[query] def loadCells(model: graft.index.Rq.RqModel,
+                               encoded2: org.apache.spark.sql.DataFrame,
+                               cells: Seq[Int]): Map[Int, RqCell] = {
     val d1 = model.base.config.numDivisions
     val d2 = model.numDivisions2
-    val rows = encoded2.select(col("partition").cast("int"),
-        col("id").cast("long"), col("codes"), col("codes2"))
-      .collect()
-    // one sort per cell; ids and both code layers derive from it
-    val byCell = rows.groupBy(_.getInt(0)).map { case (cell, rs) =>
-      cell -> rs.sortBy(_.getLong(1))
-    }
-    val ids = byCell.map { case (cell, rs) => cell -> rs.map(_.getLong(1)) }
-    def pack(fieldIdx: Int, d: Int) = byCell.map { case (cell, sorted) =>
-      val flat = new Array[Int](sorted.length * d)
-      var r = 0
-      while (r < sorted.length) {
-        val cs = sorted(r).getSeq[Int](fieldIdx)
-        require(cs.length == d,
-          s"codes row has ${cs.length} divisions, expected $d")
-        var i = 0
-        while (i < d) { flat(r * d + i) = cs(i); i += 1 }
-        r += 1
+    LocalServe.rowsByCell(encoded2, cells, col("codes"), col("codes2"))
+      .map { case (cell, sorted) =>
+        cell -> RqCell(sorted.map(_.getLong(1)),
+          LocalServe.packInts(cell, sorted, 2, d1),
+          LocalServe.packInts(cell, sorted, 3, d2))
       }
-      cell -> flat
-    }
-    val k1 = pack(2, d1)
-    val k2 = pack(3, d2)
-    val lvl1 = new LocalServe(model.base, ids, k1, None)
-    new LocalServeRq(model, lvl1, ids, k1, k2)
   }
+}
+
+/** One pinned RQ cell: id-sorted ids and both row-major code layers. */
+private[query] final case class RqCell(ids: Array[Long], codes: Array[Int],
+                                       codes2: Array[Int]) {
+  def bytes: Long = 8L * ids.length + 4L * codes.length + 4L * codes2.length
 }
 
 /** Driver-local warm serving over IVF+SQ8 cells — the scalar-quantized
@@ -368,29 +349,16 @@ object LocalServeRq {
   * preserving the (sq_dist, id) tie contract. */
 final class LocalServeSq8 private[query] (
     val model: graft.index.IvfSq8Model,
-    cellIds: Map[Int, Array[Long]],
-    cellCodes: Map[Int, Array[Byte]],
-    // true ⇒ codes are COLUMN-major (codesT(i·n + r)) and distances run
-    // through the Vector-API kernel (SimdKernels.sq8DistExact — same
-    // bits, 8 rows per accumulator); false ⇒ row-major scalar fold.
-    // One layout per server, chosen at pin time — residency stays dim
-    // bytes/vector either way.
-    columnMajor: Boolean,
-    inlineCompute: Boolean = false) extends Sq8Shard {
-
-  /** Per-query distances computed on the calling thread instead of the
-    * shared future pool — same bits, shared pinned arrays; see
-    * [[LocalServe.withInlineCompute]] for the measured guidance (at
-    * T=32 this reads +10% for SQ8 and frees the pool; at low
-    * concurrency the fan-out wins by ~6×). */
-  def withInlineCompute: LocalServeSq8 =
-    new LocalServeSq8(model, cellIds, cellCodes, columnMajor, true)
+    pinned: Map[Int, Sq8Cell]) extends CellShard {
 
   /** Cells resident on this server. */
-  def cells: Seq[Int] = cellIds.keys.toSeq.sorted
+  def cells: Seq[Int] = pinned.keys.toSeq.sorted
 
   /** Total resident vectors. */
-  def size: Long = cellIds.valuesIterator.map(_.length.toLong).sum
+  def size: Long = pinned.valuesIterator.map(_.ids.length.toLong).sum
+
+  /** SQ8 boxes pin no attributes: a filtered fleet refuses them. */
+  private[query] def attrsPinned: Boolean = false
 
   /** Warm top-k: (id, partition, sq_dist) ascending by (sq_dist, id). */
   def query(q: Array[Double], k: Int, nprobe: Int)
@@ -398,12 +366,17 @@ final class LocalServeSq8 private[query] (
     queryProbes(graft.index.IvfSq8.selectPartitions(model, q, nprobe), k)
 
   /** Top-k over an explicit probe set — see [[LocalServe.queryProbes]];
-    * the lazy tier shares one probe selection between residency and
-    * query through this seam. */
-  private[query] def queryProbes(probes: Array[(Int, Array[Double])],
-                                 k: Int): Array[(Long, Int, Double)] = {
+    * the lazy tier and the sharded [[ServeRouter]] share one probe
+    * selection through this seam. `pred` must be null: no attributes
+    * are pinned, and ignoring the filter would silently change results. */
+  override private[query] def queryProbes(probes: Array[(Int, Array[Double])],
+                                          k: Int, pred: Long => Boolean)
+      : Array[(Long, Int, Double)] = {
+    require(pred == null,
+      "SQ8 shards pin no attributes — serve filtered queries from " +
+        "attr-pinned PQ shards (fromCodesWithAttrs)")
     require(k >= 1, s"k must be >= 1, got $k")
-    val missing = probes.map(_._1).filterNot(cellIds.contains)
+    val missing = probes.map(_._1).filterNot(pinned.contains)
     require(missing.isEmpty,
       s"probed cells not resident on this server: ${missing.mkString(",")}" +
         s" (resident: ${cells.mkString(",")})")
@@ -413,68 +386,41 @@ final class LocalServeSq8 private[query] (
     val dim = model.dim
     val mins = model.codec.mins
     val scales = model.codec.scales
-    val dists: Array[Array[Double]] = if (inlineCompute) {
-      // THROUGHPUT path: same folds, calling-thread execution
-      probes.map { case (cell, localized) =>
-        val codes = cellCodes(cell)
-        val n = cellIds(cell).length
-        val out = new Array[Double](n)
-        if (columnMajor)
-          graft.functions.SimdKernels.sq8DistExact(codes, n, dim,
-            localized, mins, scales, out, 0, n)
-        else {
-          var r = 0
-          while (r < n) {
-            val base = r * dim
-            var s = 0.0
-            var i = 0
-            while (i < dim) { // identical fold to Kernels.sq8Dist
-              val d = localized(i) -
-                (mins(i) + (codes(base + i) & 0xFF) * scales(i))
-              s += d * d
-              i += 1
+    val columnMajor = LocalServeSq8.columnMajor
+    val futs = probes.map { case (cell, localized) =>
+      val codes = pinned(cell).codes
+      val n = pinned(cell).ids.length
+      val out = new Array[Double](n)
+      val block = math.max(1, n / 32)
+      Future.sequence((0 until n by block).map { s0 =>
+        Future {
+          val e = math.min(s0 + block, n)
+          if (columnMajor)
+            // Vector-API fold over the column-major layout — the
+            // scalar fold's exact bits, 8 rows per accumulator
+            graft.functions.SimdKernels.sq8DistExact(codes, n, dim,
+              localized, mins, scales, out, s0, e)
+          else {
+            var r = s0
+            while (r < e) {
+              val base = r * dim
+              var s = 0.0
+              var i = 0
+              while (i < dim) { // identical fold to Kernels.sq8Dist
+                val d = localized(i) -
+                  (mins(i) + (codes(base + i) & 0xFF) * scales(i))
+                s += d * d
+                i += 1
+              }
+              out(r) = s
+              r += 1
             }
-            out(r) = s
-            r += 1
           }
         }
-        out
-      }
-    } else {
-      val futs = probes.map { case (cell, localized) =>
-        val codes = cellCodes(cell)
-        val n = cellIds(cell).length
-        val out = new Array[Double](n)
-        val block = math.max(1, n / 32)
-        Future.sequence((0 until n by block).map { s0 =>
-          Future {
-            val e = math.min(s0 + block, n)
-            if (columnMajor)
-              // Vector-API fold over the column-major layout — the
-              // scalar fold's exact bits, 8 rows per accumulator
-              graft.functions.SimdKernels.sq8DistExact(codes, n, dim,
-                localized, mins, scales, out, s0, e)
-            else {
-              var r = s0
-              while (r < e) {
-                val base = r * dim
-                var s = 0.0
-                var i = 0
-                while (i < dim) { // identical fold to Kernels.sq8Dist
-                  val d = localized(i) -
-                    (mins(i) + (codes(base + i) & 0xFF) * scales(i))
-                  s += d * d
-                  i += 1
-                }
-                out(r) = s
-                r += 1
-              }
-            }
-          }
-        }).map(_ => out)
-      }
-      Await.result(Future.sequence(futs.toSeq), Duration.Inf).toArray
+      }).map(_ => out)
     }
+    val dists: Array[Array[Double]] =
+      Await.result(Future.sequence(futs.toSeq), Duration.Inf).toArray
     val heap = new java.util.PriorityQueue[(Long, Int, Double)](
       math.max(k, 1),
       (a: (Long, Int, Double), b: (Long, Int, Double)) => {
@@ -482,7 +428,7 @@ final class LocalServeSq8 private[query] (
         if (c != 0) c else java.lang.Long.compare(b._1, a._1)
       })
     probes.zipWithIndex.foreach { case ((cell, _), pi) =>
-      val ids = cellIds(cell)
+      val ids = pinned(cell).ids
       val ds = dists(pi)
       var r = 0
       while (r < ids.length) {
@@ -506,39 +452,48 @@ final class LocalServeSq8 private[query] (
 
 object LocalServeSq8 {
 
+  // one layout per process: COLUMN-major (codesT(i·n + r)) when the
+  // Vector-API fold (SimdKernels.sq8DistExact, 8 rows per accumulator,
+  // same bits) runs, row-major for the scalar fold; residency is dim
+  // bytes/vector either way
+  private val columnMajor = graft.functions.SimdSupport.available
+
   /** Pin an IVF+SQ8 encoded (id, partition, sq8) relation — callers
     * prune to the cells this box serves FIRST (the [[LocalServe]]
     * residency contract; SQ8 pins dim bytes per vector). */
   def fromCodes(model: graft.index.IvfSq8Model,
-                encoded: org.apache.spark.sql.DataFrame): LocalServeSq8 = {
+                encoded: org.apache.spark.sql.DataFrame): LocalServeSq8 =
+    new LocalServeSq8(model, loadCells(model, encoded, Seq.empty))
+
+  /** The SQ8 cell loader, shared by the eager pin and
+    * [[LocalServeSq8Lazy]]: each cell's id-sorted rows packed into one
+    * byte array in this process's layout. */
+  private[query] def loadCells(model: graft.index.IvfSq8Model,
+                               encoded: org.apache.spark.sql.DataFrame,
+                               cells: Seq[Int]): Map[Int, Sq8Cell] = {
     val dim = model.dim
-    val simd = graft.functions.SimdSupport.available
-    val rows = encoded.select(col("partition").cast("int"),
-        col("id").cast("long"), col("sq8"))
-      .collect()
-    val byCell = rows.groupBy(_.getInt(0))
-    val ids = byCell.map { case (cell, rs) =>
-      cell -> rs.sortBy(_.getLong(1)).map(_.getLong(1))
-    }
-    val packed = byCell.map { case (cell, rs) =>
-      val sorted = rs.sortBy(_.getLong(1))
+    LocalServe.rowsByCell(encoded, cells, col("sq8")).map { case (cell, sorted) =>
       val n = sorted.length
-      val flat = new Array[Byte](n * dim)
+      val flat = new Array[Byte](LocalServe.flatLength(cell, n, dim))
       var r = 0
       while (r < n) {
         val cs = sorted(r).getAs[Array[Byte]](2)
         require(cs.length == dim,
           s"sq8 row has ${cs.length} bytes, model dim is $dim")
-        if (simd) { // column-major for the Vector-API fold
+        if (columnMajor) {
           var i = 0
           while (i < dim) { flat(i * n + r) = cs(i); i += 1 }
         } else System.arraycopy(cs, 0, flat, r * dim, dim)
         r += 1
       }
-      cell -> flat
+      cell -> Sq8Cell(sorted.map(_.getLong(1)), flat)
     }
-    new LocalServeSq8(model, ids, packed, simd)
   }
+}
+
+/** One pinned SQ8 cell: id-sorted ids and their byte codes. */
+private[query] final case class Sq8Cell(ids: Array[Long], codes: Array[Byte]) {
+  def bytes: Long = 8L * ids.length + codes.length.toLong
 }
 
 object LocalServe {
@@ -582,10 +537,7 @@ object LocalServe {
   def fromStore(spark: SparkSession, path: String,
                 cells: Seq[Int] = Seq.empty): LocalServe = {
     val (model, codes) = IvfPqBuilder.load(spark, path)
-    val pruned =
-      if (cells.isEmpty) codes
-      else codes.where(col("partition").isin(cells: _*))
-    fromCodes(model, pruned)
+    new LocalServe(model, loadCells(model, codes, cells), None)
   }
 
   /** OPQ twin of [[fromStore]]: loads an [[graft.index.OpqBuilder]]
@@ -597,10 +549,8 @@ object LocalServe {
   def fromOpqStore(spark: SparkSession, path: String,
                    cells: Seq[Int] = Seq.empty): LocalServe = {
     val (model, codes) = graft.index.OpqBuilder.load(spark, path)
-    val pruned =
-      if (cells.isEmpty) codes
-      else codes.where(col("partition").isin(cells: _*))
-    fromCodesWith(model.ivf, pruned, Some(model.rotation))
+    new LocalServe(model.ivf, loadCells(model.ivf, codes, cells),
+      Some(model.rotation))
   }
 
   /** Pin an already-loaded (id, partition, codes) relation. The
@@ -608,13 +558,14 @@ object LocalServe {
     * class — callers prune to the cells this box serves FIRST. */
   def fromCodes(model: IvfPqModel,
                 codes: org.apache.spark.sql.DataFrame): LocalServe =
-    fromCodesWith(model, codes, None)
+    new LocalServe(model, loadCells(model, codes, Seq.empty), None)
 
   /** OPQ twin of [[fromCodes]] — pin an already-loaded OPQ-encoded
     * (id, partition, codes) relation with the model's rotation. */
   def fromCodesOpq(model: graft.index.OpqModel,
                    codes: org.apache.spark.sql.DataFrame): LocalServe =
-    fromCodesWith(model.ivf, codes, Some(model.rotation))
+    new LocalServe(model.ivf, loadCells(model.ivf, codes, Seq.empty),
+      Some(model.rotation))
 
   /** [[fromCodes]] plus ONE pinned long attribute per vector (the
     * filtered-serving residency: 8 extra bytes/vector) — enables
@@ -624,62 +575,84 @@ object LocalServe {
     * collected for exactly the cells this box serves. */
   def fromCodesWithAttrs(model: IvfPqModel,
                          codes: org.apache.spark.sql.DataFrame,
-                         attrCol: String): LocalServe = {
+                         attrCol: String): LocalServe =
+    new LocalServe(model, loadCells(model, codes, Seq.empty, attrCol), None)
+
+  /** The PQ/OPQ cell loader, shared by every eager pin and by
+    * [[LocalServeLazy]]: each cell's id-sorted rows packed into one
+    * row-major code array, plus the `attrCol` long per row when it is
+    * non-null (the filtered tier). */
+  private[query] def loadCells(model: IvfPqModel,
+                               codes: org.apache.spark.sql.DataFrame,
+                               cells: Seq[Int],
+                               attrCol: String = null): Map[Int, PqCell] = {
     val d = model.config.numDivisions
-    val rows = codes.select(col("partition").cast("int"),
-        col("id").cast("long"), col("codes"),
-        col(attrCol).cast("long"))
-      .collect()
-    val byCell = rows.groupBy(_.getInt(0)).map { case (cell, rs) =>
-      cell -> rs.sortBy(_.getLong(1))
+    val extra = col("codes") +: Option(attrCol).map(col(_).cast("long")).toSeq
+    rowsByCell(codes, cells, extra: _*).map { case (cell, sorted) =>
+      cell -> PqCell(sorted.map(_.getLong(1)), packInts(cell, sorted, 2, d),
+        if (attrCol == null) null else sorted.map(_.getLong(3)))
     }
-    val ids = byCell.map { case (cell, rs) => cell -> rs.map(_.getLong(1)) }
-    val packed = byCell.map { case (cell, sorted) =>
-      val flat = new Array[Int](sorted.length * d)
-      var r = 0
-      while (r < sorted.length) {
-        val cs = sorted(r).getSeq[Int](2)
-        require(cs.length == d,
-          s"codes row has ${cs.length} divisions, model has $d")
-        var i = 0
-        while (i < d) { flat(r * d + i) = cs(i); i += 1 }
-        r += 1
-      }
-      cell -> flat
-    }
-    val attrs = byCell.map { case (cell, rs) => cell -> rs.map(_.getLong(3)) }
-    new LocalServe(model, ids, packed, None, attrs)
   }
 
-  private def fromCodesWith(model: IvfPqModel,
-      codes: org.apache.spark.sql.DataFrame,
-      rotation: Option[Array[Array[Double]]]): LocalServe = {
-    val d = model.config.numDivisions
-    val rows = codes.select(col("partition").cast("int"),
-        col("id").cast("long"), col("codes"))
-      .collect()
-    val byCell = rows.groupBy(_.getInt(0))
-    val ids = byCell.map { case (cell, rs) =>
-      // deterministic intra-cell order (scan order is not)
-      val sorted = rs.sortBy(_.getLong(1))
-      cell -> sorted.map(_.getLong(1))
-    }
-    val packed = byCell.map { case (cell, rs) =>
-      val sorted = rs.sortBy(_.getLong(1))
-      val flat = new Array[Int](sorted.length * d)
-      var r = 0
-      while (r < sorted.length) {
-        val cs = sorted(r).getSeq[Int](2)
-        require(cs.length == d,
-          s"codes row has ${cs.length} divisions, model has $d")
-        var i = 0
-        while (i < d) { flat(r * d + i) = cs(i); i += 1 }
-        r += 1
-      }
-      cell -> flat
-    }
-    new LocalServe(model, ids, packed, rotation)
+  /** One collect of a codes relation's (partition, id, `extra`…) rows,
+    * pruned to `cells` (empty = every cell it holds) by the same
+    * `partition IN` scan the cluster query path plans, grouped by cell
+    * and sorted by id. The id order makes a cell's packed layout a pure
+    * function of the store rows whatever the scan order, which is what
+    * keeps eager, lazy and per-shard pins of one cell bit-equal. */
+  private[query] def rowsByCell(codes: org.apache.spark.sql.DataFrame,
+                                cells: Seq[Int],
+                                extra: org.apache.spark.sql.Column*)
+      : Map[Int, Array[org.apache.spark.sql.Row]] = {
+    val pruned =
+      if (cells.isEmpty) codes
+      else codes.where(col("partition").isin(cells: _*))
+    val keys = Seq(col("partition").cast("int"), col("id").cast("long"))
+    pruned.select(keys ++ extra: _*).collect()
+      .groupBy(_.getInt(0))
+      .map { case (cell, rs) => cell -> rs.sortBy(_.getLong(1)) }
   }
+
+  /** Pack int-array column `field` of a cell's sorted rows row-major,
+    * `width` values per row. */
+  private[query] def packInts(cell: Int, sorted: Array[org.apache.spark.sql.Row],
+                              field: Int, width: Int): Array[Int] = {
+    val flat = new Array[Int](flatLength(cell, sorted.length, width))
+    var r = 0
+    while (r < sorted.length) {
+      val cs = sorted(r).getSeq[Int](field)
+      require(cs.length == width,
+        s"codes row has ${cs.length} divisions, expected $width")
+      var i = 0
+      while (i < width) { flat(r * width + i) = cs(i); i += 1 }
+      r += 1
+    }
+    flat
+  }
+
+  /** The largest array length every JVM allocates (the JDK's own soft
+    * limit, `ArraysSupport.SOFT_MAX_ARRAY_LENGTH`). */
+  private val MaxArrayLength = Int.MaxValue - 8
+
+  /** Length of a cell's flat `rows` × `width` buffer, computed in Long:
+    * a cell too large for one JVM array fails loudly, naming the cell,
+    * instead of wrapping Int to a negative or short size (a 1536-d SQ8
+    * cell passes 2^31 at ~1.4M rows). */
+  private[query] def flatLength(cell: Int, rows: Int, width: Int): Int = {
+    val n = rows.toLong * width
+    require(n <= MaxArrayLength,
+      s"cell $cell: $rows rows × $width per row = $n elements, more than " +
+        s"one JVM array holds ($MaxArrayLength)")
+    n.toInt
+  }
+}
+
+/** One pinned PQ/OPQ cell: id-sorted ids, their row-major codes and,
+  * on the filtered tier only, one long attribute per row (else null). */
+private[query] final case class PqCell(ids: Array[Long], codes: Array[Int],
+                                       attrs: Array[Long]) {
+  def bytes: Long = 8L * ids.length + 4L * codes.length +
+    (if (attrs == null) 0L else 8L * attrs.length)
 }
 
 /** Driver-local warm serving over BINARY-QUANTIZED signatures — the
@@ -872,10 +845,11 @@ object LocalServeHamming {
   * FRACTION of a store bigger than its RAM instead of refusing it.
   *
   * Results are BIT-IDENTICAL to the eager pin: every query delegates
-  * to a plain [[LocalServe]] over the currently-resident cells (same
-  * packing, same ADC fold, same heap tie rule — asserted by
-  * LocalServeSpec), and a cell's packed layout is a pure function of
-  * the store rows, so pin-time does not affect answers. Relation to
+  * to a plain [[LocalServe]] over the currently-resident cells (the
+  * same cell loader, [[LocalServe.loadCells]], the same ADC fold and
+  * heap tie rule — asserted by LocalServeSpec), and a cell's packed
+  * layout is a pure function of the store rows, so pin-time does not
+  * affect answers. Relation to
   * the eager tier's REFUSAL contract: [[LocalServe.query]] throws on a
   * non-resident probe (a sharded fleet routes by cell; silence would
   * change results) — this tier is the documented alternative, turning
@@ -892,57 +866,35 @@ object LocalServeHamming {
 final class LocalServeLazy private (
     val model: IvfPqModel,
     hasAttrs: Boolean,
-    res: LazyResidency[(Array[Long], Array[Int], Array[Long]), LocalServe]) extends PqShard {
-
-  /** Cells currently resident. */
-  def cells: Seq[Int] = res.cells
-
-  /** Cold cell loads performed so far (per cell, not per query). */
-  def coldLoads: Long = res.coldLoads
-
-  /** Background warm-up: pin `cells` ahead of traffic through the same
-    * shared-promise load pass a cold query uses (a concurrently queried
-    * cell still loads exactly once), never blocking warm queries; caps
-    * and eviction apply as usual — see [[LazyResidency.prefetch]]. */
-  def prefetch(cells: Seq[Int]): Unit = res.prefetch(cells)
-
-  override private[query] def prefetchCells(cells: Seq[Int]): Unit =
-    prefetch(cells)
-
-  /** Payload bytes currently resident (ids + codes + pinned attrs). */
-  def residentBytes: Long = res.residentBytes
+    res: LazyResidency[PqCell, LocalServe])
+    extends LazyTier[LocalServe](res) with CellShard {
 
   /** Warm-or-cold top-k: identical contract and bits to
     * [[LocalServe.query]]; non-resident probed cells are pinned first
     * (one pruned scan per claimant for the cells it won), evicting
     * least-recently-probed cells past the caps. */
   def query(q: Array[Double], k: Int, nprobe: Int)
-      : Array[(Long, Int, Double)] = {
-    val probes = AnnQuery.selectPartitions(model, q, nprobe)
-    res.withResident(probes.map(_._1))(_.queryProbes(probes, k))
-  }
+      : Array[(Long, Int, Double)] =
+    queryProbes(AnnQuery.selectPartitions(model, q, nprobe), k)
 
   /** Lazy FILTERED top-k — [[LocalServe.queryFiltered]] over the
     * lazily-pinned delegate (attributes pin per cell alongside the
     * codes; requires a [[LocalServeLazy.fromCodesWithAttrs]] open). */
   def queryFiltered(q: Array[Double], k: Int, nprobe: Int)
-                   (pred: Long => Boolean): Array[(Long, Int, Double)] = {
-    require(hasAttrs,
-      "queryFiltered needs attributes pinned — open via fromCodesWithAttrs")
-    val probes = AnnQuery.selectPartitions(model, q, nprobe)
-    res.withResident(probes.map(_._1))(_.queryProbes(probes, k, pred))
-  }
+                   (pred: Long => Boolean): Array[(Long, Int, Double)] =
+    queryProbes(AnnQuery.selectPartitions(model, q, nprobe), k, pred)
 
   /** Top-k over an explicit probe set with lazy residency — the seam
-    * [[ServeRouterLazy]] routes a shard's probe subset through; pins
-    * exactly the probed cells first, then delegates to the eager loop.
-    * `pred` non-null runs the filtered form (attrs must be pinned). */
+    * a [[ServeRouter]] with a static assignment routes a shard's probe
+    * subset through; pins exactly the probed cells first, then
+    * delegates to the eager loop. `pred` non-null runs the filtered
+    * form (attrs must be pinned). */
   override private[query] def queryProbes(probes: Array[(Int, Array[Double])],
                                  k: Int, pred: Long => Boolean)
       : Array[(Long, Int, Double)] = {
     require(pred == null || hasAttrs,
       "queryFiltered needs attributes pinned — open via fromCodesWithAttrs")
-    res.withResident(probes.map(_._1))(_.queryProbes(probes, k, pred))
+    withResident(probes.map(_._1))(_.queryProbes(probes, k, pred))
   }
 
   /** Whether this box pins attributes — the lazy fleet's assembly check. */
@@ -950,8 +902,6 @@ final class LocalServeLazy private (
 }
 
 object LocalServeLazy {
-
-  private type Payload = (Array[Long], Array[Int], Array[Long])
 
   /** Open a saved IVF+PQ store for lazy serving: model artifacts load
     * (and integrity-check) NOW, codes load per cell on first probe.
@@ -963,8 +913,7 @@ object LocalServeLazy {
                 maxResidentCells: Int = 0,
                 maxResidentBytes: Long = 0L): LocalServeLazy = {
     val (model, codes) = IvfPqBuilder.load(spark, path)
-    mk(model, None, cellLoader(model, codes, null), hasAttrs = false,
-      maxResidentCells, maxResidentBytes)
+    mk(model, None, codes, null, maxResidentCells, maxResidentBytes)
   }
 
   /** OPQ twin of [[fromStore]] — rotation validated at open, applied
@@ -973,8 +922,7 @@ object LocalServeLazy {
                    maxResidentCells: Int = 0,
                    maxResidentBytes: Long = 0L): LocalServeLazy = {
     val (model, codes) = graft.index.OpqBuilder.load(spark, path)
-    mk(model.ivf, Some(model.rotation),
-      cellLoader(model.ivf, codes, null), hasAttrs = false,
+    mk(model.ivf, Some(model.rotation), codes, null,
       maxResidentCells, maxResidentBytes)
   }
 
@@ -988,67 +936,23 @@ object LocalServeLazy {
                          attrCol: String,
                          maxResidentCells: Int = 0,
                          maxResidentBytes: Long = 0L): LocalServeLazy =
-    mk(model, None, cellLoader(model, codes, attrCol), hasAttrs = true,
-      maxResidentCells, maxResidentBytes)
+    mk(model, None, codes, attrCol, maxResidentCells, maxResidentBytes)
 
   private def mk(model: IvfPqModel,
                  rotation: Option[Array[Array[Double]]],
-                 loader: Seq[Int] => Map[Int, Payload],
-                 hasAttrs: Boolean,
+                 codes: org.apache.spark.sql.DataFrame,
+                 attrCol: String,
                  maxResidentCells: Int,
                  maxResidentBytes: Long): LocalServeLazy = {
-    val res = new LazyResidency[Payload, LocalServe](
-      loader,
-      emptyPayload =
-        (Array.empty[Long], Array.empty[Int], Array.empty[Long]),
-      payloadBytes = p => 8L * p._1.length + 4L * p._2.length +
-        (if (p._3 == null) 0L else 8L * p._3.length),
-      mkDelegate = snap => {
-        val ids = snap.view.mapValues(_._1).toMap
-        val codes = snap.view.mapValues(_._2).toMap
-        if (hasAttrs)
-          new LocalServe(model, ids, codes, rotation,
-            snap.view.mapValues(_._3).toMap)
-        else new LocalServe(model, ids, codes, rotation)
-      },
+    val hasAttrs = attrCol != null
+    val res = new LazyResidency[PqCell, LocalServe](
+      LocalServe.loadCells(model, codes, _, attrCol),
+      emptyPayload = PqCell(Array.empty, Array.empty,
+        if (hasAttrs) Array.empty else null),
+      payloadBytes = _.bytes,
+      mkDelegate = new LocalServe(model, _, rotation),
       maxResidentCells, maxResidentBytes)
     new LocalServeLazy(model, hasAttrs, res)
-  }
-
-  /** The cold loader: ONE pruned `partition IN` scan for the missing
-    * cells, packed into the exact layout [[LocalServe.fromCodes]]
-    * builds (sort by id, flat code array) — the pure-function property
-    * that makes lazy answers bit-equal eager ones. `attrCol` non-null
-    * additionally pins that long column per row (the filtered tier). */
-  private def cellLoader(model: IvfPqModel,
-                         codes: org.apache.spark.sql.DataFrame,
-                         attrCol: String)
-      : Seq[Int] => Map[Int, Payload] = { missing =>
-    val d = model.config.numDivisions
-    val base = Seq(col("partition").cast("int"), col("id").cast("long"),
-      col("codes"))
-    val cols = if (attrCol == null) base
-      else base :+ col(attrCol).cast("long")
-    val rows = codes.where(col("partition").isin(missing: _*))
-      .select(cols: _*)
-      .collect()
-    rows.groupBy(_.getInt(0)).map { case (cell, rs) =>
-      val sorted = rs.sortBy(_.getLong(1))
-      val ids = sorted.map(_.getLong(1))
-      val flat = new Array[Int](sorted.length * d)
-      var r = 0
-      while (r < sorted.length) {
-        val cs = sorted(r).getSeq[Int](2)
-        require(cs.length == d,
-          s"codes row has ${cs.length} divisions, model has $d")
-        var i = 0
-        while (i < d) { flat(r * d + i) = cs(i); i += 1 }
-        r += 1
-      }
-      val attrs = if (attrCol == null) null
-        else sorted.map(_.getLong(3))
-      cell -> ((ids, flat, attrs): Payload)
-    }
   }
 }
 
@@ -1061,39 +965,25 @@ object LocalServeLazy {
   * [[LazyResidency]]'s (shared with the PQ/OPQ and RQ tiers). */
 final class LocalServeSq8Lazy private (
     val model: graft.index.IvfSq8Model,
-    res: LazyResidency[(Array[Long], Array[Byte]), LocalServeSq8]) extends Sq8Shard {
-
-  /** Cells currently resident. */
-  def cells: Seq[Int] = res.cells
-
-  /** Cold cell loads performed so far. */
-  def coldLoads: Long = res.coldLoads
-
-  /** Background warm-up: pin `cells` ahead of traffic through the same
-    * shared-promise load pass a cold query uses (a concurrently queried
-    * cell still loads exactly once), never blocking warm queries; caps
-    * and eviction apply as usual — see [[LazyResidency.prefetch]]. */
-  def prefetch(cells: Seq[Int]): Unit = res.prefetch(cells)
-
-  override private[query] def prefetchCells(cells: Seq[Int]): Unit =
-    prefetch(cells)
-
-  /** Payload bytes currently resident (ids + byte codes). */
-  def residentBytes: Long = res.residentBytes
+    res: LazyResidency[Sq8Cell, LocalServeSq8])
+    extends LazyTier[LocalServeSq8](res) with CellShard {
 
   /** Warm-or-cold top-k — identical contract and bits to
     * [[LocalServeSq8.query]]. */
   def query(q: Array[Double], k: Int, nprobe: Int)
-      : Array[(Long, Int, Double)] = {
-    val probes = graft.index.IvfSq8.selectPartitions(model, q, nprobe)
-    res.withResident(probes.map(_._1))(_.queryProbes(probes, k))
-  }
+      : Array[(Long, Int, Double)] =
+    queryProbes(graft.index.IvfSq8.selectPartitions(model, q, nprobe), k)
 
-  /** Explicit-probe top-k with lazy residency — the [[ServeRouterSq8Lazy]]
-    * seam (see [[LocalServeLazy.queryProbes]]). */
-  private[query] def queryProbes(probes: Array[(Int, Array[Double])],
-                                 k: Int): Array[(Long, Int, Double)] =
-    res.withResident(probes.map(_._1))(_.queryProbes(probes, k))
+  /** Explicit-probe top-k with lazy residency — the [[ServeRouter]]
+    * seam (see [[LocalServeLazy.queryProbes]]); `pred` must be null,
+    * as on [[LocalServeSq8.queryProbes]]. */
+  override private[query] def queryProbes(probes: Array[(Int, Array[Double])],
+                                          k: Int, pred: Long => Boolean)
+      : Array[(Long, Int, Double)] =
+    withResident(probes.map(_._1))(_.queryProbes(probes, k, pred))
+
+  /** SQ8 boxes pin no attributes: a filtered fleet refuses them. */
+  private[query] def attrsPinned: Boolean = false
 }
 
 object LocalServeSq8Lazy {
@@ -1104,40 +994,11 @@ object LocalServeSq8Lazy {
                 maxResidentCells: Int = 0,
                 maxResidentBytes: Long = 0L): LocalServeSq8Lazy = {
     val (model, codes) = graft.index.IvfSq8.load(spark, path)
-    val dim = model.dim
-    val simd = graft.functions.SimdSupport.available
-    val loader: Seq[Int] => Map[Int, (Array[Long], Array[Byte])] =
-      missing => {
-        val rows = codes.where(col("partition").isin(missing: _*))
-          .select(col("partition").cast("int"), col("id").cast("long"),
-            col("sq8"))
-          .collect()
-        rows.groupBy(_.getInt(0)).map { case (cell, rs) =>
-          val sorted = rs.sortBy(_.getLong(1))
-          val n = sorted.length
-          val ids = sorted.map(_.getLong(1))
-          val flat = new Array[Byte](n * dim)
-          var r = 0
-          while (r < n) {
-            val cs = sorted(r).getAs[Array[Byte]](2)
-            require(cs.length == dim,
-              s"sq8 row has ${cs.length} bytes, model dim is $dim")
-            if (simd) { // the LocalServeSq8.fromCodes layout rule
-              var i = 0
-              while (i < dim) { flat(i * n + r) = cs(i); i += 1 }
-            } else System.arraycopy(cs, 0, flat, r * dim, dim)
-            r += 1
-          }
-          cell -> ((ids, flat))
-        }
-      }
-    val res = new LazyResidency[(Array[Long], Array[Byte]), LocalServeSq8](
-      loader,
-      emptyPayload = (Array.empty[Long], Array.empty[Byte]),
-      payloadBytes = p => 8L * p._1.length + p._2.length.toLong,
-      mkDelegate = snap => new LocalServeSq8(model,
-        snap.view.mapValues(_._1).toMap,
-        snap.view.mapValues(_._2).toMap, simd),
+    val res = new LazyResidency[Sq8Cell, LocalServeSq8](
+      LocalServeSq8.loadCells(model, codes, _),
+      emptyPayload = Sq8Cell(Array.empty, Array.empty),
+      payloadBytes = _.bytes,
+      mkDelegate = new LocalServeSq8(model, _),
       maxResidentCells, maxResidentBytes)
     new LocalServeSq8Lazy(model, res)
   }
@@ -1152,48 +1013,28 @@ object LocalServeSq8Lazy {
   * concurrency and empty-cell semantics are [[LazyResidency]]'s. */
 final class LocalServeRqLazy private (
     val model: graft.index.Rq.RqModel,
-    res: LazyResidency[(Array[Long], Array[Int], Array[Int]), LocalServeRq]) extends RqShard {
-
-  /** Cells currently resident. */
-  def cells: Seq[Int] = res.cells
-
-  /** Cold cell loads performed so far. */
-  def coldLoads: Long = res.coldLoads
-
-  /** Background warm-up: pin `cells` ahead of traffic through the same
-    * shared-promise load pass a cold query uses (a concurrently queried
-    * cell still loads exactly once), never blocking warm queries; caps
-    * and eviction apply as usual — see [[LazyResidency.prefetch]]. */
-  def prefetch(cells: Seq[Int]): Unit = res.prefetch(cells)
-
-  override private[query] def prefetchCells(cells: Seq[Int]): Unit =
-    prefetch(cells)
-
-  /** Payload bytes currently resident (ids + both code layers). */
-  def residentBytes: Long = res.residentBytes
+    res: LazyResidency[RqCell, LocalServeRq])
+    extends LazyTier[LocalServeRq](res) with RqShard {
 
   /** Warm-or-cold refined top-k — identical contract and bits to
     * [[LocalServeRq.query]]. */
   def query(q: Array[Double], k: Int, nprobe: Int,
             kFactor: Int = 4): Array[(Long, Double)] = {
     val probes = AnnQuery.selectPartitions(model.base, q, nprobe)
-    res.withResident(probes.map(_._1))(
-      _.queryProbes(probes, q, k, kFactor))
+    withResident(probes.map(_._1))(_.queryProbes(probes, q, k, kFactor))
   }
 
   /** Both-score nominees over explicit probes with lazy residency —
-    * the [[ServeRouterRqLazy]] seam (the fleet's two-phase merge needs
+    * the [[ServeRouterRq]] seam (the fleet's two-phase merge needs
     * the level-1 AND refined scores; see
     * [[LocalServeRq.nomineesScored]]). */
   private[query] def nomineesScored(probes: Array[(Int, Array[Double])],
                                     q: Array[Double], n: Int)
       : Array[(Long, Int, Double, Double)] =
-    res.withResident(probes.map(_._1))(_.nomineesScored(probes, q, n))
+    withResident(probes.map(_._1))(_.nomineesScored(probes, q, n))
 }
 
 object LocalServeRqLazy {
-
-  private type Payload = (Array[Long], Array[Int], Array[Int])
 
   /** Open a saved refined store ([[graft.index.Rq.save]]) for lazy
     * serving — both model levels load and integrity-check now, each
@@ -1212,45 +1053,11 @@ object LocalServeRqLazy {
                 encoded2: org.apache.spark.sql.DataFrame,
                 maxResidentCells: Int = 0,
                 maxResidentBytes: Long = 0L): LocalServeRqLazy = {
-    val d1 = model.base.config.numDivisions
-    val d2 = model.numDivisions2
-    val loader: Seq[Int] => Map[Int, Payload] = missing => {
-      val rows = encoded2.where(col("partition").isin(missing: _*))
-        .select(col("partition").cast("int"), col("id").cast("long"),
-          col("codes"), col("codes2"))
-        .collect()
-      rows.groupBy(_.getInt(0)).map { case (cell, rs) =>
-        val sorted = rs.sortBy(_.getLong(1))
-        val ids = sorted.map(_.getLong(1))
-        def pack(fieldIdx: Int, d: Int): Array[Int] = {
-          val flat = new Array[Int](sorted.length * d)
-          var r = 0
-          while (r < sorted.length) {
-            val cs = sorted(r).getSeq[Int](fieldIdx)
-            require(cs.length == d,
-              s"codes row has ${cs.length} divisions, expected $d")
-            var i = 0
-            while (i < d) { flat(r * d + i) = cs(i); i += 1 }
-            r += 1
-          }
-          flat
-        }
-        cell -> ((ids, pack(2, d1), pack(3, d2)): Payload)
-      }
-    }
-    val res = new LazyResidency[Payload, LocalServeRq](
-      loader,
-      emptyPayload =
-        (Array.empty[Long], Array.empty[Int], Array.empty[Int]),
-      payloadBytes = p =>
-        8L * p._1.length + 4L * p._2.length + 4L * p._3.length,
-      mkDelegate = snap => {
-        val ids = snap.view.mapValues(_._1).toMap
-        val k1 = snap.view.mapValues(_._2).toMap
-        val k2 = snap.view.mapValues(_._3).toMap
-        new LocalServeRq(model,
-          new LocalServe(model.base, ids, k1, None), ids, k1, k2)
-      },
+    val res = new LazyResidency[RqCell, LocalServeRq](
+      LocalServeRq.loadCells(model, encoded2, _),
+      emptyPayload = RqCell(Array.empty, Array.empty, Array.empty),
+      payloadBytes = _.bytes,
+      mkDelegate = new LocalServeRq(model, _),
       maxResidentCells, maxResidentBytes)
     new LocalServeRqLazy(model, res)
   }

@@ -77,7 +77,7 @@ private[query] final class ShardConn(host: String, port: Int)
   }
 }
 
-/** Remote shard clients: [[PqShard]] / [[RqShard]] / [[HammingShard]]
+/** Remote shard clients: [[CellShard]] / [[RqShard]] / [[HammingShard]]
   * implementations that forward each trait call over [[ShardWire]] to a
   * [[ShardServer]] in another process. Because scores cross the wire as
   * raw IEEE bits and every op maps to exactly one in-process trait
@@ -86,12 +86,14 @@ private[query] final class ShardConn(host: String, port: Int)
   * spec'd per family in RemoteShardSpec against a real second JVM). */
 object RemoteShards {
 
-  /** PQ/OPQ-family remote shard. `cells` is fetched once at connect —
-    * the remote form serves EAGER (fixed-residency) shards, matching
-    * [[ServeRouter]]'s assembly-time ownership map. */
+  /** Flat-cell (PQ/OPQ) remote shard. `cells` is fetched once at
+    * connect: an eager shard server's pinned cells, which a
+    * [[ServeRouter]] built from shards' cells reads as its ownership
+    * map; a lazy one's resident cells, for a router under a static
+    * assignment. */
   final class Pq private[query] (conn: ShardConn,
                                  cellsSnapshot: Seq[Int])
-      extends PqShard with AutoCloseable {
+      extends CellShard with AutoCloseable {
 
     def cells: Seq[Int] = cellsSnapshot
 

@@ -1,33 +1,45 @@
 package graft.query
 
-import graft.index.IvfPqModel
+import graft.index.{IvfPqModel, IvfSq8Model}
 
-/** Cell-sharded warm serving: N cell-disjoint [[PqShard]]s behind one
+/** Cell-sharded warm serving: N cell-disjoint [[CellShard]]s behind one
   * top-k merge — the executable form of the serving-tier contract ("a
   * box serves the cells it holds, a fleet shards cells across boxes",
   * [[LocalServe]] scaladoc) and the throughput lever the round-12 OPQ
   * A/B measured out (BENCH_NOTES: one box's ~1.5k QPS OPQ ceiling is
   * aggregate compute/bandwidth — more arithmetic only comes from more
-  * boxes).
+  * boxes). One router serves every flat-cell codec: PQ/OPQ and SQ8.
   *
-  * Routing: one probe selection per query ([[AnnQuery.selectPartitions]]
-  * — driver arithmetic over the model's P centroids, identical to the
-  * single-box path), then each probed (cell, localized) pair routes to
-  * the unique shard holding that cell and every shard answers its
-  * subset through [[PqShard.queryProbes]] — byte-for-byte the
-  * single-box ADC loop over fewer cells. The merge re-applies the
-  * global (sq_dist, id) order over the ≤ shards·k candidates
-  * ([[ShardFan.mergeTopK]] — the rule lives once for every family).
+  * Routing: one probe selection per query — the codec's own driver
+  * arithmetic over the model's P centroids ([[AnnQuery.selectPartitions]]
+  * or [[graft.index.IvfSq8.selectPartitions]]), identical to the
+  * single-box path — then each probed (cell, localized) pair routes to
+  * the one shard that owns it and every shard answers its subset
+  * through [[CellShard.queryProbes]] — byte-for-byte the single-box
+  * scan over fewer cells. The merge re-applies the global (sq_dist, id)
+  * order over the ≤ shards·k candidates ([[ShardFan.mergeTopK]] — the
+  * rule lives once for every family).
+  *
+  * Ownership comes in two kinds, each an `Int => Int` cell → shard:
+  *  - from the shards' own cells (eager shards; overlap refused at
+  *    assembly) — `ServeRouter(model, shards)`;
+  *  - a static assignment, typically `cell % numShards` (lazy shards,
+  *    whose residency is dynamic by design: each pins its assigned
+  *    cells on first probe under its own caps, so N boxes together hold
+  *    the hot fraction of a store none of them could pin alone) —
+  *    `ServeRouter(model, shards, assign)`.
+  * Either way a probe into a cell no shard owns throws, the fleet form
+  * of the single-box refusal; the router adds no residency state.
   *
   * Bit-parity argument (spec'd in ServeRouterSpec and gated by
-  * `ann_serve_sharded`): each probe's ADC table is a pure function of
+  * `ann_serve_sharded`): each probe's score table is a pure function of
   * (model, localized query), so a cell scores identically on any
   * shard; every member of the true global top-k is, a fortiori, in its
   * own shard's top-k; and both tiers break ties by (sq_dist, id) — so
   * sort-merge of the per-shard top-k equals the single-box top-k
   * exactly, bit for bit.
   *
-  * Shards are behind the [[PqShard]] trait: in this process
+  * Shards are behind the [[CellShard]] trait: in this process
   * ([[LocalServe]], where the router adds no throughput — the shards
   * share one set of arithmetic units, measured, BENCH_NOTES r13) or
   * across a process boundary ([[RemoteShards.pq]], each shard JVM
@@ -35,41 +47,48 @@ import graft.index.IvfPqModel
   * The per-shard call is deliberately synchronous so the transport
   * wraps `shards` without changing the merge. */
 final class ServeRouter private (
-    val model: IvfPqModel,
-    shards: IndexedSeq[PqShard],
-    cellShard: Map[Int, Int]) {
+    select: (Array[Double], Int) => Array[(Int, Array[Double])],
+    shards: IndexedSeq[CellShard],
+    shardOf: Int => Int) {
 
   /** Number of shards behind this router. */
   def numShards: Int = shards.length
 
-  /** Warm top-k across the shard fleet: identical contract and bits to
-    * a single [[LocalServe]] holding every shard's cells. Probed cells
-    * no shard holds throw, the fleet-level form of the single-box
-    * refusal contract. */
+  /** Warm (or, over lazy shards, cold) top-k across the shard fleet:
+    * identical contract and bits to a single box holding every cell. */
   def query(q: Array[Double], k: Int, nprobe: Int)
-      : Array[(Long, Int, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val probes = AnnQuery.selectPartitions(model, q, nprobe)
-    ShardFan.mergeTopK(
-      ShardFan.fanOut(probes, c => cellShard.getOrElse(c, -1), shards.length,
-        (si, sp) => shards(si).queryProbes(sp, k)),
-      k)
-  }
+      : Array[(Long, Int, Double)] =
+    fan(q, k, nprobe, null)
 
   /** FILTERED top-k across the fleet — [[LocalServe.queryFiltered]]'s
     * contract sharded: the predicate narrows candidates INSIDE each
-    * shard's ADC loop (per row, before the heap), so the per-shard
+    * shard's scan loop (per row, before the heap), so the per-shard
     * top-k is the filtered top-k of its cells and the same merge
     * argument applies verbatim. Every shard must have pinned attrs. */
   def queryFiltered(q: Array[Double], k: Int, nprobe: Int)
                    (pred: Long => Boolean): Array[(Long, Int, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
     require(shards.forall(_.attrsPinned),
       "fleet queryFiltered needs attributes pinned on EVERY shard — " +
-        "load shards via fromCodesWithAttrs")
-    val probes = AnnQuery.selectPartitions(model, q, nprobe)
+        "pin or open shards via fromCodesWithAttrs")
+    fan(q, k, nprobe, pred)
+  }
+
+  /** Fleet warm-up: route `cells` to their owners and prefetch each
+    * shard's subset CONCURRENTLY — each lazy shard runs its one
+    * shared-promise load pass ([[LazyResidency.prefetch]]: warm
+    * traffic unblocked, caps honored, a concurrently queried cell
+    * still loads once); eager shards no-op, and in-process and remote
+    * ([[RemoteShards.Pq]]) shards both answer it. Blocks until every
+    * shard's pass returns. */
+  def prefetch(cells: Seq[Int]): Unit =
+    ShardFan.fanPrefetch(cells, shardOf, shards.length,
+      (si, cs) => shards(si).prefetchCells(cs))
+
+  private def fan(q: Array[Double], k: Int, nprobe: Int,
+                  pred: Long => Boolean): Array[(Long, Int, Double)] = {
+    require(k >= 1, s"k must be >= 1, got $k")
     ShardFan.mergeTopK(
-      ShardFan.fanOut(probes, c => cellShard.getOrElse(c, -1), shards.length,
+      ShardFan.fanOut(select(q, nprobe), shardOf, shards.length,
         (si, sp) => shards(si).queryProbes(sp, k, pred)),
       k)
   }
@@ -77,136 +96,33 @@ final class ServeRouter private (
 
 object ServeRouter {
 
-  /** Assemble a router over cell-disjoint shards. Shards must not
-    * overlap (two copies of a cell would double-count its candidates);
-    * coverage of ALL the model's cells is NOT required — a probe into
-    * an unheld cell throws at query time, exactly the single-box
-    * refusal. */
-  def apply(model: IvfPqModel, shards: Seq[PqShard]): ServeRouter = {
+  /** A PQ/OPQ fleet over cell-disjoint shards (ownership from their
+    * cells). */
+  def apply(model: IvfPqModel, shards: Seq[CellShard]): ServeRouter =
+    apply(model, shards, ShardFan.cellOwners(shards))
+
+  /** A PQ/OPQ fleet under a static cell → shard assignment (one shard
+    * per assignment index). */
+  def apply(model: IvfPqModel, shards: Seq[CellShard],
+            assign: Int => Int): ServeRouter =
+    build(AnnQuery.selectPartitions(model, _, _), shards, assign)
+
+  /** An SQ8 fleet over cell-disjoint shards — the per-row sq8 distance
+    * is a pure function of (codec constants, localized query, row), so
+    * the merge argument carries over unchanged. */
+  def apply(model: IvfSq8Model, shards: Seq[CellShard]): ServeRouter =
+    apply(model, shards, ShardFan.cellOwners(shards))
+
+  /** An SQ8 fleet under a static cell → shard assignment. */
+  def apply(model: IvfSq8Model, shards: Seq[CellShard],
+            assign: Int => Int): ServeRouter =
+    build(graft.index.IvfSq8.selectPartitions(model, _, _), shards, assign)
+
+  private def build(
+      select: (Array[Double], Int) => Array[(Int, Array[Double])],
+      shards: Seq[CellShard], shardOf: Int => Int): ServeRouter = {
     require(shards.nonEmpty, "router needs at least one shard")
-    val pairs = shards.zipWithIndex.flatMap { case (s, i) =>
-      s.cells.map(_ -> i)
-    }
-    val dup = pairs.groupBy(_._1).filter(_._2.length > 1).keys
-    require(dup.isEmpty,
-      s"cells held by more than one shard: ${dup.toSeq.sorted.mkString(",")}")
-    new ServeRouter(model, shards.toIndexedSeq, pairs.toMap)
-  }
-}
-
-/** Cell-ASSIGNED router over LAZY shards — the fleet form of the lazy
-  * tier: a static cell→shard assignment (not the shards' current
-  * residency, which is dynamic by design) routes each probed cell to
-  * its one owner, and every shard is a [[LocalServeLazy]] that pins its
-  * assigned cells on first probe under its own caps. N boxes together
-  * hold the hot fraction of a store NONE of them could pin alone;
-  * results stay bit-identical to a single box over the same store
-  * (the [[ServeRouter]] merge argument — per-probe ADC tables are pure
-  * functions of (model, localized), per-shard top-k keeps every true
-  * global member, both tiers break ties by (sq_dist, id)).
-  *
-  * The assignment must cover every cell a query can probe (a probe
-  * into an unassigned cell throws — the fleet refusal contract);
-  * typically `cell % numShards`. Shards opened with caps keep their
-  * own LRU/bytes eviction — the router adds no residency state. */
-final class ServeRouterLazy private (
-    val model: IvfPqModel,
-    shards: IndexedSeq[PqShard],
-    assign: Int => Int) {
-
-  /** Number of shards behind this router. */
-  def numShards: Int = shards.length
-
-  /** Warm-or-cold top-k across the lazy fleet: identical contract and
-    * bits to one [[LocalServeLazy]] holding every cell. */
-  def query(q: Array[Double], k: Int, nprobe: Int)
-      : Array[(Long, Int, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val probes = AnnQuery.selectPartitions(model, q, nprobe)
-    ShardFan.mergeTopK(
-      ShardFan.fanOut(probes, assign, shards.length,
-        (si, sp) => shards(si).queryProbes(sp, k)),
-      k)
-  }
-
-  /** FILTERED top-k across the lazy fleet — every shard must be opened
-    * via [[LocalServeLazy.fromCodesWithAttrs]] (attrs pin per cell with
-    * the codes); the predicate narrows inside each shard's loop, so the
-    * [[ServeRouter.queryFiltered]] merge argument carries over. */
-  def queryFiltered(q: Array[Double], k: Int, nprobe: Int)
-                   (pred: Long => Boolean): Array[(Long, Int, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(shards.forall(_.attrsPinned),
-      "fleet queryFiltered needs attributes pinned on EVERY shard — " +
-        "open shards via fromCodesWithAttrs")
-    val probes = AnnQuery.selectPartitions(model, q, nprobe)
-    ShardFan.mergeTopK(
-      ShardFan.fanOut(probes, assign, shards.length,
-        (si, sp) => shards(si).queryProbes(sp, k, pred)),
-      k)
-  }
-
-  /** Fleet warm-up: route `cells` to their owners and prefetch each
-    * shard's subset CONCURRENTLY — each lazy shard runs its one
-    * shared-promise load pass ([[LazyResidency.prefetch]]: warm
-    * traffic unblocked, caps honored, a concurrently queried cell
-    * still loads once); in-process and remote ([[RemoteShards.Pq]])
-    * shards both answer it. Blocks until every shard's pass returns. */
-  def prefetch(cells: Seq[Int]): Unit =
-    ShardFan.fanPrefetch(cells, assign, shards.length,
-      (si, cs) => shards(si).prefetchCells(cs))
-}
-
-object ServeRouterLazy {
-
-  /** Assemble a lazy fleet router from shards (one per assignment
-    * index) and a static cell→shard assignment. */
-  def apply(model: IvfPqModel, shards: Seq[PqShard],
-            assign: Int => Int): ServeRouterLazy = {
-    require(shards.nonEmpty, "router needs at least one shard")
-    new ServeRouterLazy(model, shards.toIndexedSeq, assign)
-  }
-}
-
-/** [[ServeRouter]] for IVF+SQ8 shards — identical routing and merge
-  * over [[Sq8Shard.queryProbes]]; the per-row sq8 distance is a
-  * pure function of (codec constants, localized query, row), so the
-  * merge argument carries over unchanged. */
-final class ServeRouterSq8 private (
-    val model: graft.index.IvfSq8Model,
-    shards: IndexedSeq[Sq8Shard],
-    cellShard: Map[Int, Int]) {
-
-  /** Number of shards behind this router. */
-  def numShards: Int = shards.length
-
-  /** Warm top-k across the fleet — bit-identical to a single
-    * [[LocalServeSq8]] holding every shard's cells. */
-  def query(q: Array[Double], k: Int, nprobe: Int)
-      : Array[(Long, Int, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val probes = graft.index.IvfSq8.selectPartitions(model, q, nprobe)
-    ShardFan.mergeTopK(
-      ShardFan.fanOut(probes, c => cellShard.getOrElse(c, -1), shards.length,
-        (si, sp) => shards(si).queryProbes(sp, k)),
-      k)
-  }
-}
-
-object ServeRouterSq8 {
-
-  /** Assemble over cell-disjoint SQ8 shards — same contract as
-    * [[ServeRouter.apply]]. */
-  def apply(model: graft.index.IvfSq8Model,
-            shards: Seq[Sq8Shard]): ServeRouterSq8 = {
-    require(shards.nonEmpty, "router needs at least one shard")
-    val pairs = shards.zipWithIndex.flatMap { case (s, i) =>
-      s.cells.map(_ -> i)
-    }
-    val dup = pairs.groupBy(_._1).filter(_._2.length > 1).keys
-    require(dup.isEmpty,
-      s"cells held by more than one shard: ${dup.toSeq.sorted.mkString(",")}")
-    new ServeRouterSq8(model, shards.toIndexedSeq, pairs.toMap)
+    new ServeRouter(select, shards.toIndexedSeq, shardOf)
   }
 }
 
@@ -220,27 +136,34 @@ object ServeRouterSq8 {
   * [[ShardFan.mergeTwoPhase]] re-applies the global level-1 order to
   * reconstruct the single box's nomination set exactly before the
   * refined (sq_dist, id) order. Both scores are pure functions of
-  * (model, q, row), so shard-local computation cannot change them. */
+  * (model, q, row), so shard-local computation cannot change them.
+  * Ownership comes in the same two kinds as [[ServeRouter]]'s (from
+  * eager shards' cells, or a static assignment over lazy shards that
+  * pin both code layers per cell). */
 final class ServeRouterRq private (
     val model: graft.index.Rq.RqModel,
     shards: IndexedSeq[RqShard],
-    cellShard: Map[Int, Int]) {
+    shardOf: Int => Int) {
 
   /** Number of shards behind this router. */
   def numShards: Int = shards.length
 
-  /** Warm refined top-k across the fleet — bit-identical to a single
-    * [[LocalServeRq]] holding every shard's cells. */
+  /** Refined top-k across the fleet — bit-identical to a single
+    * [[LocalServeRq]] holding every cell. */
   def query(q: Array[Double], k: Int, nprobe: Int,
             kFactor: Int = 4): Array[(Long, Double)] = {
     require(k >= 1 && kFactor >= 1, s"bad k=$k / kFactor=$kFactor")
     val probes = AnnQuery.selectPartitions(model.base, q, nprobe)
     val n = k * kFactor
-    val nominees =
-      ShardFan.fanOut(probes, c => cellShard.getOrElse(c, -1), shards.length,
-        (si, sp) => shards(si).nomineesScored(sp, q, n))
+    val nominees = ShardFan.fanOut(probes, shardOf, shards.length,
+      (si, sp) => shards(si).nomineesScored(sp, q, n))
     ShardFan.mergeTwoPhase(nominees.map(t => (t._1, t._3, t._4)), n, k)
   }
+
+  /** Fleet warm-up — see [[ServeRouter.prefetch]]. */
+  def prefetch(cells: Seq[Int]): Unit =
+    ShardFan.fanPrefetch(cells, shardOf, shards.length,
+      (si, cs) => shards(si).prefetchCells(cs))
 }
 
 object ServeRouterRq {
@@ -248,15 +171,14 @@ object ServeRouterRq {
   /** Assemble over cell-disjoint RQ shards — same contract as
     * [[ServeRouter.apply]]. */
   def apply(model: graft.index.Rq.RqModel,
-            shards: Seq[RqShard]): ServeRouterRq = {
+            shards: Seq[RqShard]): ServeRouterRq =
+    apply(model, shards, ShardFan.cellOwners(shards))
+
+  /** Assemble under a static cell → shard assignment. */
+  def apply(model: graft.index.Rq.RqModel, shards: Seq[RqShard],
+            assign: Int => Int): ServeRouterRq = {
     require(shards.nonEmpty, "router needs at least one shard")
-    val pairs = shards.zipWithIndex.flatMap { case (s, i) =>
-      s.cells.map(_ -> i)
-    }
-    val dup = pairs.groupBy(_._1).filter(_._2.length > 1).keys
-    require(dup.isEmpty,
-      s"cells held by more than one shard: ${dup.toSeq.sorted.mkString(",")}")
-    new ServeRouterRq(model, shards.toIndexedSeq, pairs.toMap)
+    new ServeRouterRq(model, shards.toIndexedSeq, assign)
   }
 }
 
@@ -309,87 +231,5 @@ object ServeRouterHamming {
       }
     }
     new ServeRouterHamming(shards.toIndexedSeq)
-  }
-}
-
-/** [[ServeRouterLazy]] for IVF+SQ8 lazy shards — static assignment,
-  * per-shard lazy pinning under each shard's own caps, identical merge
-  * to [[ServeRouterSq8]]; completes the lazy fleet across the
-  * cell-partitioned codec families. */
-final class ServeRouterSq8Lazy private (
-    val model: graft.index.IvfSq8Model,
-    shards: IndexedSeq[Sq8Shard],
-    assign: Int => Int) {
-
-  /** Number of shards behind this router. */
-  def numShards: Int = shards.length
-
-  /** Warm-or-cold top-k across the lazy SQ8 fleet — bit-identical to
-    * one [[LocalServeSq8Lazy]] holding every cell. */
-  def query(q: Array[Double], k: Int, nprobe: Int)
-      : Array[(Long, Int, Double)] = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val probes = graft.index.IvfSq8.selectPartitions(model, q, nprobe)
-    ShardFan.mergeTopK(
-      ShardFan.fanOut(probes, assign, shards.length,
-        (si, sp) => shards(si).queryProbes(sp, k)),
-      k)
-  }
-
-  /** Fleet warm-up — see [[ServeRouterLazy.prefetch]]. */
-  def prefetch(cells: Seq[Int]): Unit =
-    ShardFan.fanPrefetch(cells, assign, shards.length,
-      (si, cs) => shards(si).prefetchCells(cs))
-}
-
-object ServeRouterSq8Lazy {
-
-  /** Assemble a lazy SQ8 fleet — same contract as
-    * [[ServeRouterLazy.apply]]. */
-  def apply(model: graft.index.IvfSq8Model, shards: Seq[Sq8Shard],
-            assign: Int => Int): ServeRouterSq8Lazy = {
-    require(shards.nonEmpty, "router needs at least one shard")
-    new ServeRouterSq8Lazy(model, shards.toIndexedSeq, assign)
-  }
-}
-
-/** [[ServeRouterLazy]] for two-level RQ lazy shards — static
-  * assignment, lazy per-cell pinning of BOTH code layers, and the
-  * [[ServeRouterRq]] two-phase merge (global level-1 nomination cut,
-  * then the refined order); completes the lazy fleet's refine path. */
-final class ServeRouterRqLazy private (
-    val model: graft.index.Rq.RqModel,
-    shards: IndexedSeq[RqShard],
-    assign: Int => Int) {
-
-  /** Number of shards behind this router. */
-  def numShards: Int = shards.length
-
-  /** Warm-or-cold refined top-k across the lazy RQ fleet —
-    * bit-identical to one [[LocalServeRqLazy]] holding every cell. */
-  def query(q: Array[Double], k: Int, nprobe: Int,
-            kFactor: Int = 4): Array[(Long, Double)] = {
-    require(k >= 1 && kFactor >= 1, s"bad k=$k / kFactor=$kFactor")
-    val probes = AnnQuery.selectPartitions(model.base, q, nprobe)
-    val n = k * kFactor
-    val nominees = ShardFan.fanOut(probes, assign, shards.length,
-      (si, sp) => shards(si).nomineesScored(sp, q, n))
-    ShardFan.mergeTwoPhase(nominees.map(t => (t._1, t._3, t._4)), n, k)
-  }
-
-  /** Fleet warm-up — see [[ServeRouterLazy.prefetch]]. */
-  def prefetch(cells: Seq[Int]): Unit =
-    ShardFan.fanPrefetch(cells, assign, shards.length,
-      (si, cs) => shards(si).prefetchCells(cs))
-}
-
-object ServeRouterRqLazy {
-
-  /** Assemble a lazy RQ fleet — same contract as
-    * [[ServeRouterLazy.apply]]. */
-  def apply(model: graft.index.Rq.RqModel, shards: Seq[RqShard],
-            assign: Int => Int): ServeRouterRqLazy = {
-    require(shards.nonEmpty, "router needs at least one shard")
-    new ServeRouterRqLazy(model, shards.toIndexedSeq, assign)
   }
 }

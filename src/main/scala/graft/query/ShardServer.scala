@@ -15,16 +15,19 @@ import graft.query.{ShardWire => W}
   * client's connection pool, which keeps the server trivially correct.
   *
   * The server computes NOTHING the in-process shard would not: every
-  * op decodes to exactly one trait call ([[PqShard.queryProbes]],
+  * op decodes to exactly one trait call ([[CellShard.queryProbes]],
   * [[RqShard.nomineesScored]], [[HammingShard]] ops), and shard-side
   * `require` refusals (e.g. a probe into a non-resident cell) travel
   * back as error frames and re-throw client-side — the fleet refusal
   * contract crosses the boundary intact. */
 final class ShardServer private (
     ss: ServerSocket,
-    pqShard: Option[PqShard],
+    pqShard: Option[CellShard],
     rqShard: Option[RqShard],
     hammingShard: Option[HammingShard]) extends AutoCloseable {
+
+  // the cell-partitioned family hosted here, if any (OpCells/OpPrefetch)
+  private val cellHolder: Option[CellHolder] = pqShard.orElse(rqShard)
 
   @volatile private var closed = false
   private val shutdownLatch = new CountDownLatch(1)
@@ -68,8 +71,7 @@ final class ShardServer private (
             try {
               op match {
                 case W.OpCells =>
-                  val cs = pqShard.map(_.cells)
-                    .orElse(rqShard.map(_.cells))
+                  val cs = cellHolder.map(_.cells)
                     .getOrElse(throw new IllegalStateException(
                       "this server hosts no cell-partitioned family"))
                   Right(d => W.writeInts(d, cs.toArray))
@@ -111,8 +113,7 @@ final class ShardServer private (
                   Right(d => W.writeLongs(d, shard.idsSnapshot))
                 case W.OpPrefetch =>
                   val cs = W.readInts(req).toSeq
-                  pqShard.map(_.prefetchCells(cs))
-                    .orElse(rqShard.map(_.prefetchCells(cs)))
+                  cellHolder.map(_.prefetchCells(cs))
                     .getOrElse(throw new IllegalStateException(
                       "this server hosts no cell-partitioned family"))
                   Right(_ => ())
@@ -168,8 +169,8 @@ object ShardServer {
     // policy and binds the fleet interface explicitly
     new ServerSocket(port, 64, InetAddress.getLoopbackAddress)
 
-  /** Serve a PQ/OPQ-family shard (eager or lazy — any [[PqShard]]). */
-  def pq(shard: PqShard, port: Int = 0): ShardServer =
+  /** Serve a flat-cell shard (eager or lazy — any [[CellShard]]). */
+  def pq(shard: CellShard, port: Int = 0): ShardServer =
     new ShardServer(bind(port), Some(shard), None, None)
 
   /** Serve a two-level RQ shard. */
@@ -196,8 +197,9 @@ object ShardServer {
   * [[ShardWire.OpPrefetch]] warm-up, and evicts past the caps — the
   * fleet form for a store bigger than the fleet's combined RAM. A lazy
   * shard ignores `--cells` (ownership lives in the router's static
-  * assignment — [[ServeRouterLazy]]). Prints `GRAFT_SHARD_READY
-  * port=<p>` on stdout when serving ([[ShardProcess]] scrapes it). */
+  * assignment — a [[ServeRouter]] built with `assign`). Prints
+  * `GRAFT_SHARD_READY port=<p>` on stdout when serving
+  * ([[ShardProcess]] scrapes it). */
 object ShardServerMain {
 
   def main(args: Array[String]): Unit = {

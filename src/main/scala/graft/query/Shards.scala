@@ -1,45 +1,35 @@
 package graft.query
 
-/** The serving fleet's shard seams — the synchronous call surface every
-  * [[ServeRouter]] family fans out over, factored to traits so a shard
-  * can live in this process ([[LocalServe]] and friends) or behind a
-  * process boundary ([[RemoteShards]]) without the router or the merge
-  * changing: the bit-parity argument (per-probe scores are pure
-  * functions of (model, localized query, row); both tiers break ties by
-  * (score, id)) never mentions WHERE the shard computes, so the traits
-  * are exactly the seam a transport wraps.
+/** The serving fleet's shard seams — the synchronous call surface the
+  * routers ([[ServeRouter]], [[ServeRouterRq]], [[ServeRouterHamming]])
+  * fan out over, factored to traits so a shard can live in this process
+  * ([[LocalServe]] and friends) or behind a process boundary
+  * ([[RemoteShards]]) without the router or the merge changing: the
+  * bit-parity argument (per-probe scores are pure functions of (model,
+  * localized query, row); both tiers break ties by (score, id)) never
+  * mentions WHERE the shard computes, so the traits are exactly the
+  * seam a transport wraps.
   *
-  * Each trait carries one family's RPC surface (reference:
+  * Each trait carries one merge shape's RPC surface (reference:
   * asyncdb/proto.rs defines the reference's own query RPC at this same
   * granularity — probe subset in, scored candidates out):
   *
-  *  - [[PqShard]] — flat ADC top-k over a probe subset (PQ/OPQ codecs,
-  *    eager or lazy residency), plus the filtered form.
-  *  - [[Sq8Shard]] — the same shape over SQ8 codes.
+  *  - [[CellShard]] — flat top-k over a probe subset, for every codec
+  *    whose score is final at the scan (PQ/OPQ ADC, SQ8), eager or lazy
+  *    residency, plus the filtered form.
   *  - [[RqShard]] — BOTH-score nominees for the two-level refine
   *    families (the fleet's two-phase merge needs the level-1 and
   *    refined scores together — see [[LocalServeRq.nomineesScored]]).
   *  - [[HammingShard]] — flat signature scans (no cells; shards split
   *    the corpus by id) plus both-score rerank nominees.
+  *
+  * The two cell-partitioned surfaces share [[CellHolder]].
   */
-trait PqShard {
+trait CellHolder {
 
   /** Cells this shard answers for (eager: pinned; lazy: currently
     * resident — ownership then comes from the router's assignment). */
   def cells: Seq[Int]
-
-  /** Top-k over an explicit (cell, localized query) probe subset —
-    * byte-for-byte [[LocalServe.query]]'s arithmetic over fewer cells.
-    * `pred` non-null narrows candidates inside the scan loop (requires
-    * [[attrsPinned]]); it is an in-process closure, so transports that
-    * cannot ship it must refuse loudly rather than silently ignore it. */
-  private[query] def queryProbes(probes: Array[(Int, Array[Double])],
-                                 k: Int, pred: Long => Boolean = null)
-      : Array[(Long, Int, Double)]
-
-  /** Whether this shard holds per-vector attributes (the fleet
-    * queryFiltered assembly check). */
-  private[query] def attrsPinned: Boolean
 
   /** Make `cells` resident ahead of traffic. Lazy shards run one
     * shared-promise load pass ([[LazyResidency.prefetch]] — never
@@ -48,25 +38,27 @@ trait PqShard {
   private[query] def prefetchCells(cells: Seq[Int]): Unit = ()
 }
 
-/** IVF+SQ8 shard surface — see [[PqShard]]. */
-trait Sq8Shard {
+/** Flat-cell shard surface: PQ/OPQ and SQ8 shards, eager or lazy, in
+  * process or remote. */
+trait CellShard extends CellHolder {
 
-  /** Cells this shard answers for. */
-  def cells: Seq[Int]
-
-  /** SQ8 top-k over an explicit probe subset. */
+  /** Top-k over an explicit (cell, localized query) probe subset —
+    * byte-for-byte the codec's single-box scan over fewer cells.
+    * `pred` non-null narrows candidates inside the scan loop (requires
+    * [[attrsPinned]]); it is an in-process closure, so shards that
+    * cannot apply it (SQ8, remote) must refuse loudly rather than
+    * silently ignore it. */
   private[query] def queryProbes(probes: Array[(Int, Array[Double])],
-                                 k: Int): Array[(Long, Int, Double)]
+                                 k: Int, pred: Long => Boolean = null)
+      : Array[(Long, Int, Double)]
 
-  /** See [[PqShard.prefetchCells]]. */
-  private[query] def prefetchCells(cells: Seq[Int]): Unit = ()
+  /** Whether this shard holds per-vector attributes (the fleet
+    * queryFiltered assembly check). */
+  private[query] def attrsPinned: Boolean
 }
 
-/** Two-level RQ shard surface — see [[PqShard]]. */
-trait RqShard {
-
-  /** Cells this shard answers for. */
-  def cells: Seq[Int]
+/** Two-level RQ shard surface — see [[CellShard]]. */
+trait RqShard extends CellHolder {
 
   /** (id, cell, lvl1_sq_dist, refined_sq_dist) for this shard's
     * level-1 top-`n` nominees — both scores, so the router can
@@ -74,12 +66,9 @@ trait RqShard {
   private[query] def nomineesScored(probes: Array[(Int, Array[Double])],
                                     q: Array[Double], n: Int)
       : Array[(Long, Int, Double, Double)]
-
-  /** See [[PqShard.prefetchCells]]. */
-  private[query] def prefetchCells(cells: Seq[Int]): Unit = ()
 }
 
-/** Binary-signature shard surface — see [[PqShard]]. Signatures have no
+/** Binary-signature shard surface — see [[CellShard]]. Signatures have no
   * cells; every shard answers every query over its id-disjoint rows. */
 trait HammingShard {
 
@@ -103,6 +92,22 @@ trait HammingShard {
   * rules live here ONCE so the (score, id) tie-break cannot drift per
   * family on a future edit. */
 private[query] object ShardFan {
+
+  /** Ownership from the shards' own cells (eager shards): a cell maps
+    * to the one shard holding it, an unheld cell to -1. Shards must not
+    * overlap — two copies of a cell would double-count its candidates;
+    * coverage of every model cell is NOT required (a probe into an
+    * unheld cell throws at query time, the single-box refusal). */
+  def cellOwners(shards: Seq[CellHolder]): Int => Int = {
+    val pairs = shards.zipWithIndex.flatMap { case (s, i) =>
+      s.cells.map(_ -> i)
+    }
+    val dup = pairs.groupBy(_._1).filter(_._2.length > 1).keys
+    require(dup.isEmpty,
+      s"cells held by more than one shard: ${dup.toSeq.sorted.mkString(",")}")
+    val owner = pairs.toMap
+    c => owner.getOrElse(c, -1)
+  }
 
   /** Fan a probe subset out over shards by ownership. `shardOf` returns
     * the owning shard index for a cell, or a negative value for an

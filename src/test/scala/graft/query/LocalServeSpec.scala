@@ -58,7 +58,7 @@ class LocalServeSpec extends AnyFunSuite {
   }
 
   test("every probe block of the table prep, nprobe = 1 to P, matches " +
-      "AnnQuery.topK (pinned and inline)") {
+      "AnnQuery.topK") {
     // P = 9 cells: nprobe 1 is the lone-probe kernel, 2-4 the repeated
     // 5-block, 5 one full block, 6-9 a block plus each tail; C = 32
     // codes fill whole code vectors in both kernels
@@ -67,7 +67,6 @@ class LocalServeSpec extends AnyFunSuite {
     val (m9, enc9) = IvfPqBuilder.fit(df, "id", "vec", dim, cfg)
     val codes = enc9.select("id", "partition", "codes").localCheckpoint()
     val serve = LocalServe.fromCodes(m9, codes)
-    val inline = serve.withInlineCompute
     for {
       qid <- Seq(3L, 171L)
       nprobe <- 1 to cfg.numPartitions
@@ -78,8 +77,6 @@ class LocalServeSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
       assert(serve.query(q, 10, nprobe).toSeq === cluster.toSeq,
         s"mismatch at qid=$qid nprobe=$nprobe")
-      assert(inline.query(q, 10, nprobe).toSeq === cluster.toSeq,
-        s"inline mismatch at qid=$qid nprobe=$nprobe")
     }
   }
 
@@ -448,23 +445,17 @@ class LocalServeSpec extends AnyFunSuite {
     }
   }
 
-  test("withInlineCompute: the throughput view answers bit-identically " +
-      "to the future-based path (PQ, OPQ, SQ8)") {
-    val eager = LocalServe.fromStore(spark, storeDir)
-    val inline = eager.withInlineCompute
-    val (opqModel, opqEncoded) = graft.index.OpqBuilder.fit(
-      df, "id", "vec", dim, config, opqIters = 2)
-    val opq = LocalServe.fromCodesOpq(opqModel, opqEncoded)
-    val opqInline = opq.withInlineCompute
-    val (sqModel, sqEnc) = graft.index.IvfSq8.fit(df, "id", "vec", dim,
-      numPartitions = 4)
-    val sq = LocalServeSq8.fromCodes(sqModel, sqEnc.localCheckpoint())
-    val sqInline = sq.withInlineCompute
-    for (qid <- Seq(0L, 57L, 199L)) {
-      val q = data.find(_._1 == qid).get._2.map(_.toDouble).toArray
-      assert(inline.query(q, 10, 3).toSeq === eager.query(q, 10, 3).toSeq)
-      assert(opqInline.query(q, 10, 3).toSeq === opq.query(q, 10, 3).toSeq)
-      assert(sqInline.query(q, 10, 3).toSeq === sq.query(q, 10, 3).toSeq)
+  test("a cell buffer is sized in Long: one too large for a JVM array " +
+      "fails loudly with its cell, rows and width") {
+    // 1,400,000 rows × 1536 bytes = 2,150,400,000 > Int.MaxValue — the
+    // size a 1536-d SQ8 cell reaches; checked without allocating
+    val ex = intercept[IllegalArgumentException] {
+      LocalServe.flatLength(cell = 7, rows = 1400000, width = 1536)
     }
+    assert(ex.getMessage.contains("cell 7: 1400000 rows × 1536"))
+    assert(ex.getMessage.contains("2150400000"))
+    assert(LocalServe.flatLength(cell = 7, rows = 1000000, width = 1536) ===
+      1536000000)
+    assert(LocalServe.flatLength(cell = 0, rows = 0, width = 1536) === 0)
   }
 }

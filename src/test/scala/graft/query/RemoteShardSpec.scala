@@ -129,7 +129,7 @@ class RemoteShardSpec extends AnyFunSuite {
           "lazy shard JVM must start with an empty residency")
         val localLazy = LocalServeLazy.fromStore(spark, storeDir)
         val assign = (c: Int) => c % 2 // even → local, odd → remote JVM
-        val router = ServeRouterLazy(model, Seq(localLazy, remote), assign)
+        val router = ServeRouter(model, Seq(localLazy, remote), assign)
         // fleet warm-up: each owner's subset prefetches concurrently;
         // the remote's odd cells travel as ONE OpPrefetch frame
         router.prefetch(allCells)

@@ -129,7 +129,7 @@ class ServeRouterSpec extends AnyFunSuite {
     val shards = Seq(cells.filter(_ % 2 == 0), cells.filter(_ % 2 == 1))
       .map(cs => LocalServeSq8.fromCodes(sqModel,
         sqEnc.where(col("partition").isin(cs: _*))))
-    val router = ServeRouterSq8(sqModel, shards)
+    val router = ServeRouter(sqModel, shards)
     for {
       qid <- Seq(0L, 63L, 127L, 191L)
       (k, nprobe) <- Seq((5, 1), (10, 3), (7, 6))
@@ -140,7 +140,7 @@ class ServeRouterSpec extends AnyFunSuite {
         s"SQ8 router mismatch at qid=$qid k=$k nprobe=$nprobe")
     }
     val ex = intercept[IllegalArgumentException] {
-      ServeRouterSq8(sqModel, Seq(single, shards(0)))
+      ServeRouter(sqModel, Seq(single, shards(0)))
     }
     assert(ex.getMessage.contains("more than one shard"))
   }
@@ -208,7 +208,7 @@ class ServeRouterSpec extends AnyFunSuite {
     val sqSingle = LocalServeSq8.fromCodes(sqModel, sqEnc)
     val sqShards = (0 until 2).map(_ =>
       LocalServeSq8Lazy.fromStore(spark, sqDir))
-    val sqRouter = ServeRouterSq8Lazy(sqModel, sqShards, _ % 2)
+    val sqRouter = ServeRouter(sqModel, sqShards, _ % 2)
     for (qid <- Seq(0L, 63L, 127L); (k, nprobe) <- Seq((5, 2), (10, 6))) {
       val q = data.find(_._1 == qid).get._2.map(_.toDouble).toArray
       assert(sqRouter.query(q, k, nprobe).toSeq ===
@@ -225,7 +225,7 @@ class ServeRouterSpec extends AnyFunSuite {
     val rqSingle = LocalServeRq.fromCodes(rq, enc2)
     val rqShards = (0 until 2).map(_ =>
       LocalServeRqLazy.fromCodes(rq, enc2))
-    val rqRouter = ServeRouterRqLazy(rq, rqShards, _ % 2)
+    val rqRouter = ServeRouterRq(rq, rqShards, _ % 2)
     for {
       qid <- Seq(0L, 63L, 127L)
       (k, nprobe, kf) <- Seq((5, 2, 1), (10, 3, 4), (7, 6, 2))
@@ -265,7 +265,7 @@ class ServeRouterSpec extends AnyFunSuite {
     val single = LocalServe.fromStore(spark, storeDir)
     val shards = (0 until 2).map(_ =>
       LocalServeLazy.fromStore(spark, storeDir))
-    val router = ServeRouterLazy(model, shards, _ % 2)
+    val router = ServeRouter(model, shards, _ % 2)
     for {
       qid <- Seq(0L, 63L, 127L, 191L)
       (k, nprobe) <- Seq((5, 1), (10, 3), (7, 6))
@@ -282,7 +282,7 @@ class ServeRouterSpec extends AnyFunSuite {
     // capped lazy shards still answer correctly (eviction under the hood)
     val capped = (0 until 2).map(_ =>
       LocalServeLazy.fromStore(spark, storeDir, maxResidentCells = 2))
-    val cappedRouter = ServeRouterLazy(model, capped, _ % 2)
+    val cappedRouter = ServeRouter(model, capped, _ % 2)
     for (qid <- Seq(0L, 63L, 127L, 191L, 0L)) {
       val q = data.find(_._1 == qid).get._2.map(_.toDouble).toArray
       assert(cappedRouter.query(q, 5, 2).toSeq ===
@@ -291,7 +291,7 @@ class ServeRouterSpec extends AnyFunSuite {
     }
     // out-of-range assignment refuses loudly: one shard, %2 assignment
     // routes every odd probed cell out of range at full nprobe
-    val underProvisioned = ServeRouterLazy(model, Seq(shards(0)), _ % 2)
+    val underProvisioned = ServeRouter(model, Seq(shards(0)), _ % 2)
     val ex = intercept[IllegalArgumentException] {
       underProvisioned.query(data.head._2.map(_.toDouble).toArray, 5,
         config.numPartitions)
@@ -306,7 +306,7 @@ class ServeRouterSpec extends AnyFunSuite {
     val singleF = LocalServe.fromCodesWithAttrs(loaded, withAttr, "tag")
     val lazyShards = (0 until 2).map(_ =>
       LocalServeLazy.fromCodesWithAttrs(loaded, withAttr, "tag"))
-    val fRouter = ServeRouterLazy(loaded, lazyShards, _ % 2)
+    val fRouter = ServeRouter(loaded, lazyShards, _ % 2)
     for (qid <- Seq(0L, 63L, 127L); (k, nprobe) <- Seq((5, 3), (10, 6))) {
       val q = data.find(_._1 == qid).get._2.map(_.toDouble).toArray
       assert(fRouter.queryFiltered(q, k, nprobe)(_ == 1L).toSeq ===
@@ -317,5 +317,71 @@ class ServeRouterSpec extends AnyFunSuite {
       router.queryFiltered(data.head._2.map(_.toDouble).toArray, 5, 2)(_ => true)
     }
     assert(exF.getMessage.contains("EVERY shard"))
+  }
+
+  test("the one merge is split-invariant: random 1-4 shard splits under " +
+      "both ownership kinds answer bit-identically to the single box " +
+      "(PQ, SQ8, RQ)") {
+    import org.scalacheck.{Gen, Prop, Test => SchkTest}
+    import org.scalacheck.Prop.propBoolean
+    // every codec's cells load once; each sample re-splits them in memory
+    val (loaded, codes) = IvfPqBuilder.load(spark, storeDir)
+    val pq = LocalServe.loadCells(loaded, codes, Seq.empty)
+    val (sqModel, sqEnc) = graft.index.IvfSq8.fit(df, "id", "vec", dim,
+      numPartitions = config.numPartitions)
+    val sq = LocalServeSq8.loadCells(sqModel, sqEnc, Seq.empty)
+    val (rq, enc2) = graft.index.Rq.fitRefine(encoded, model,
+      numDivisions2 = 8, numCodes2 = 8, trainPointsPerCentroid = 0)
+    val rqc = LocalServeRq.loadCells(rq, enc2, Seq.empty)
+    val pqSingle = new LocalServe(loaded, pq, None)
+    val sqSingle = new LocalServeSq8(sqModel, sq)
+    val rqSingle = new LocalServeRq(rq, rqc)
+    def split[C](cells: Map[Int, C], owner: Int => Int, n: Int) =
+      (0 until n).map(i => cells.filter { case (c, _) => owner(c) == i })
+    val gen = for {
+      n <- Gen.choose(1, 4)
+      owners <- Gen.listOfN(config.numPartitions, Gen.choose(0, n - 1))
+      // a point anywhere in the blobs' box: far from most rows, so the
+      // RQ level-1 and refined orders often disagree across cells (about
+      // one sample in 40 tells the two-phase merge from a one-phase one;
+      // queries on a data point almost never do)
+      v <- Gen.listOfN(dim, Gen.choose(-10.0, 10.0))
+      // a far query: every distance saturates to +Inf, so candidates of
+      // different cells tie and only the merge's id rule orders them
+      // (finite distances of different cells practically never tie)
+      far <- Gen.frequency(3 -> false, 1 -> true)
+      k <- Gen.choose(1, 12)
+      nprobe <- Gen.choose(1, config.numPartitions)
+      kFactor <- Gen.choose(1, 4)
+    } yield (n, owners.toIndexedSeq, v, far, k, nprobe, kFactor)
+    val prop = Prop.forAllNoShrink(gen) {
+      case (n, owners, v, far, k, nprobe, kFactor) =>
+        val q = (if (far) v.map(_ + 1e300) else v).toArray
+        val owner: Int => Int = owners
+        val pqShards = split(pq, owner, n).map(new LocalServe(loaded, _, None))
+        val sqShards = split(sq, owner, n).map(new LocalServeSq8(sqModel, _))
+        val rqShards = split(rqc, owner, n).map(new LocalServeRq(rq, _))
+        val pqWant = pqSingle.query(q, k, nprobe).toSeq
+        val sqWant = sqSingle.query(q, k, nprobe).toSeq
+        val rqWant = rqSingle.query(q, k, nprobe, kFactor).toSeq
+        Prop.all(
+          (ServeRouter(loaded, pqShards).query(q, k, nprobe).toSeq ==
+            pqWant) :| "PQ, ownership from cells",
+          (ServeRouter(loaded, pqShards, owner).query(q, k, nprobe).toSeq ==
+            pqWant) :| "PQ, static assignment",
+          (ServeRouter(sqModel, sqShards).query(q, k, nprobe).toSeq ==
+            sqWant) :| "SQ8, ownership from cells",
+          (ServeRouter(sqModel, sqShards, owner).query(q, k, nprobe).toSeq ==
+            sqWant) :| "SQ8, static assignment",
+          (ServeRouterRq(rq, rqShards).query(q, k, nprobe, kFactor).toSeq ==
+            rqWant) :| "RQ, ownership from cells",
+          (ServeRouterRq(rq, rqShards, owner)
+            .query(q, k, nprobe, kFactor).toSeq == rqWant) :|
+            "RQ, static assignment")
+    }
+    val res = SchkTest.check(SchkTest.Parameters.default
+      .withMinSuccessfulTests(400)
+      .withInitialSeed(org.scalacheck.rng.Seed(2911L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 }
