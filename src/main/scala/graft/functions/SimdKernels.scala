@@ -18,8 +18,10 @@ import jdk.incubator.vector.{ByteVector, DoubleVector, IntVector, VectorOperator
   *
   *  - [[adcTablesExact]]: the ADC table entries
   *    T_p(c) = Σ_i (loc_p(i) − cb(c)(i))² of one division for every
-  *    probe p. 8 codes ride one accumulator over a COLUMN-MAJOR codebook
-  *    (cbT(i·C + c), [[transposed]] once per model), and each loaded
+  *    probe p. 8 codes ride one accumulator over a CODE-BLOCK codebook
+  *    (one contiguous m×8 run per 8 codes, [[codeBlocks]] once per
+  *    model, so a pass reads it front to back instead of striding C·8
+  *    bytes per step), and each loaded
   *    codebook vector serves a block of up to 5 probes, each with its
   *    own accumulator held in a local (an array of accumulators defeats
   *    C2's register allocation): `d = loc_p(i) − v; acc_p = d·d + acc_p`
@@ -30,9 +32,11 @@ import jdk.incubator.vector.{ByteVector, DoubleVector, IntVector, VectorOperator
   *    once per probe.
   *  - [[centroidDists5]]: the build's twin of the ADC table kernel —
   *    five points' squared distances to every centroid.
-  *  - [[cellDistsExact]]: the query's squared distance to every coarse
-  *    centroid, 8 cells per accumulator over a column-major centroid
-  *    copy, i ascending — the same fold, so cell choice is unchanged.
+  *  - [[cellDistsExact]]: the query's squared distance to the coarse
+  *    centroids of a range of 8-cell lane blocks, 8 cells per
+  *    accumulator (four independent chains) over a column-major
+  *    centroid copy, i ascending — the same fold, so cell choice is
+  *    unchanged; disjoint ranges split one selection across threads.
   *  - [[rotateExact]]: out(r) = Σ_t R(r,t)·v(t). Lane r accumulates
   *    `acc = (row·v) + acc` in ascending t — the scalar `s += row(t)*v(t)`
   *    exactly. Rows are independent, so 8 rows ride one 512-bit
@@ -87,25 +91,46 @@ object SimdKernels {
   def cellMajor(centroids: Array[Array[Double]]): Array[Double] =
     transposed(centroids, (centroids.length + lanes - 1) / lanes * lanes)
 
+  /** The code-block layout [[adcTablesExact]] reads: the codebook's
+    * codes in blocks of [[lanes]], each block ONE contiguous m×lanes run
+    * (out(b·m·L + i·L + j) = codebook(b·L + j)(i)), so a table pass
+    * streams the codebook front to back. The last block's missing codes
+    * read 0; their lanes are computed and never stored. */
+  def codeBlocks(codebook: Array[Array[Double]]): Array[Double] = {
+    val L = SPD.length()
+    val n = codebook.length
+    val m = if (n == 0) 0 else codebook(0).length
+    val out = new Array[Double]((n + L - 1) / L * L * m)
+    var c = 0
+    while (c < n) {
+      val base = c / L * (m * L) + c % L
+      val row = codebook(c)
+      var i = 0
+      while (i < m) { out(base + i * L) = row(i); i += 1 }
+      c += 1
+    }
+    out
+  }
+
   /** ADC tables of ONE division for every probe:
-    * outs(p)(outOff + c) = Σ_{i<m} (locs(p)(locOff + i) − cbT(i·C + c))²
+    * outs(p)(outOff + c) = Σ_{i<m} (locs(p)(locOff + i) − cb(c)(i))²
     * for c ∈ [0, C) — bit-identical to [[Kernels.subSqDist]] per entry
-    * (see object doc). `cbT` is the division's codebook [[transposed]]
-    * (C codes of m doubles). Probes go in blocks of 5 that share each
-    * codebook load; a tail of 2–4 probes runs the same block with its
-    * last probe repeated (identical stores), a lone probe runs
-    * [[table1]]. */
-  def adcTablesExact(cbT: Array[Double], m: Int, numCodes: Int,
+    * (see object doc). `cbB` is the division's codebook in
+    * [[codeBlocks]] layout (C codes of m doubles). Probes go in blocks
+    * of 5 that share each codebook load; a tail of 2–4 probes runs the
+    * same block with its last probe repeated (identical stores), a lone
+    * probe runs [[table1]]. */
+  def adcTablesExact(cbB: Array[Double], m: Int, numCodes: Int,
                      locs: Array[Array[Double]], locOff: Int,
                      outs: Array[Array[Double]], outOff: Int): Unit = {
     val n = locs.length
     var p = 0
     while (p < n) {
-      if (n - p == 1) table1(cbT, m, numCodes, locs(p), locOff, outs(p), outOff)
+      if (n - p == 1) table1(cbB, m, numCodes, locs(p), locOff, outs(p), outOff)
       else {
         val p1 = math.min(p + 1, n - 1); val p2 = math.min(p + 2, n - 1)
         val p3 = math.min(p + 3, n - 1); val p4 = math.min(p + 4, n - 1)
-        table5(cbT, m, numCodes, locOff, outOff,
+        table5(cbB, m, numCodes, locOff, outOff,
           locs(p), locs(p1), locs(p2), locs(p3), locs(p4),
           outs(p), outs(p1), outs(p2), outs(p3), outs(p4))
       }
@@ -113,36 +138,23 @@ object SimdKernels {
     }
   }
 
-  /** Σ_{i<m} (loc(lo + i) − cbT(i·C + c))²: the scalar fold of one
-    * column, for code tails that do not fill a vector. */
-  private def column(cbT: Array[Double], m: Int, numCodes: Int, c: Int,
-                     loc: Array[Double], lo: Int): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < m) {
-      val d = loc(lo + i) - cbT(i * numCodes + c)
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  /** Five probes share each codebook vector load. */
-  private def table5(cbT: Array[Double], m: Int, numCodes: Int,
+  /** Five probes share each codebook vector load; block b's lane-i
+    * vector sits at b·m·L + i·L. */
+  private def table5(cbB: Array[Double], m: Int, numCodes: Int,
                      lo: Int, oo: Int,
                      l0: Array[Double], l1: Array[Double], l2: Array[Double],
                      l3: Array[Double], l4: Array[Double],
                      o0: Array[Double], o1: Array[Double], o2: Array[Double],
                      o3: Array[Double], o4: Array[Double]): Unit = {
     val L = SPD.length()
-    val vecEnd = (numCodes / L) * L
     var c = 0
-    while (c < vecEnd) {
+    var base = 0
+    while (c < numCodes) {
       var a0 = DoubleVector.zero(SPD); var a1 = a0; var a2 = a0
       var a3 = a0; var a4 = a0
       var i = 0
       while (i < m) {
-        val v = DoubleVector.fromArray(SPD, cbT, i * numCodes + c)
+        val v = DoubleVector.fromArray(SPD, cbB, base + i * L)
         val d0 = DoubleVector.broadcast(SPD, l0(lo + i)).sub(v)
         a0 = d0.mul(d0).add(a0)
         val d1 = DoubleVector.broadcast(SPD, l1(lo + i)).sub(v)
@@ -155,63 +167,64 @@ object SimdKernels {
         a4 = d4.mul(d4).add(a4)
         i += 1
       }
-      a0.intoArray(o0, oo + c); a1.intoArray(o1, oo + c)
-      a2.intoArray(o2, oo + c); a3.intoArray(o3, oo + c)
-      a4.intoArray(o4, oo + c)
+      if (c + L <= numCodes) {
+        a0.intoArray(o0, oo + c); a1.intoArray(o1, oo + c)
+        a2.intoArray(o2, oo + c); a3.intoArray(o3, oo + c)
+        a4.intoArray(o4, oo + c)
+      } else { // the padded last block: real codes only
+        val mask = SPD.indexInRange(c, numCodes)
+        a0.intoArray(o0, oo + c, mask); a1.intoArray(o1, oo + c, mask)
+        a2.intoArray(o2, oo + c, mask); a3.intoArray(o3, oo + c, mask)
+        a4.intoArray(o4, oo + c, mask)
+      }
       c += L
-    }
-    while (c < numCodes) {
-      o0(oo + c) = column(cbT, m, numCodes, c, l0, lo)
-      o1(oo + c) = column(cbT, m, numCodes, c, l1, lo)
-      o2(oo + c) = column(cbT, m, numCodes, c, l2, lo)
-      o3(oo + c) = column(cbT, m, numCodes, c, l3, lo)
-      o4(oo + c) = column(cbT, m, numCodes, c, l4, lo)
-      c += 1
+      base += m * L
     }
   }
 
-  /** One probe: four code vectors per pass, so four independent
+  /** One probe: four code blocks per pass, so four independent
     * accumulator chains hide the add latency. */
-  private def table1(cbT: Array[Double], m: Int, numCodes: Int,
+  private def table1(cbB: Array[Double], m: Int, numCodes: Int,
                      l0: Array[Double], lo: Int,
                      o0: Array[Double], oo: Int): Unit = {
     val L = SPD.length()
+    val step = m * L
     var c = 0
+    var base = 0
     while (c + 4 * L <= numCodes) {
       var a0 = DoubleVector.zero(SPD); var a1 = a0; var a2 = a0; var a3 = a0
       var i = 0
       while (i < m) {
         val b = DoubleVector.broadcast(SPD, l0(lo + i))
-        val o = i * numCodes + c
-        val d0 = b.sub(DoubleVector.fromArray(SPD, cbT, o))
+        val o = base + i * L
+        val d0 = b.sub(DoubleVector.fromArray(SPD, cbB, o))
         a0 = d0.mul(d0).add(a0)
-        val d1 = b.sub(DoubleVector.fromArray(SPD, cbT, o + L))
+        val d1 = b.sub(DoubleVector.fromArray(SPD, cbB, o + step))
         a1 = d1.mul(d1).add(a1)
-        val d2 = b.sub(DoubleVector.fromArray(SPD, cbT, o + 2 * L))
+        val d2 = b.sub(DoubleVector.fromArray(SPD, cbB, o + 2 * step))
         a2 = d2.mul(d2).add(a2)
-        val d3 = b.sub(DoubleVector.fromArray(SPD, cbT, o + 3 * L))
+        val d3 = b.sub(DoubleVector.fromArray(SPD, cbB, o + 3 * step))
         a3 = d3.mul(d3).add(a3)
         i += 1
       }
       a0.intoArray(o0, oo + c); a1.intoArray(o0, oo + c + L)
       a2.intoArray(o0, oo + c + 2 * L); a3.intoArray(o0, oo + c + 3 * L)
       c += 4 * L
+      base += 4 * step
     }
-    while (c + L <= numCodes) {
+    while (c < numCodes) {
       var a0 = DoubleVector.zero(SPD)
       var i = 0
       while (i < m) {
         val d0 = DoubleVector.broadcast(SPD, l0(lo + i))
-          .sub(DoubleVector.fromArray(SPD, cbT, i * numCodes + c))
+          .sub(DoubleVector.fromArray(SPD, cbB, base + i * L))
         a0 = d0.mul(d0).add(a0)
         i += 1
       }
-      a0.intoArray(o0, oo + c)
+      if (c + L <= numCodes) a0.intoArray(o0, oo + c)
+      else a0.intoArray(o0, oo + c, SPD.indexInRange(c, numCodes))
       c += L
-    }
-    while (c < numCodes) {
-      o0(oo + c) = column(cbT, m, numCodes, c, l0, lo)
-      c += 1
+      base += step
     }
   }
 
@@ -265,20 +278,47 @@ object SimdKernels {
     }
   }
 
-  /** dist(p) = Σ_{i<dim} (q(i) − centT(i·stride + p))² for every cell
-    * column p ∈ [0, stride), 8 cells per accumulator in ascending i —
-    * [[Kernels.subSqDist]] of q and centroid p, lane by lane. `centT` is
-    * [[cellMajor]] (stride = centT.length / dim); padded cells come out
-    * as ‖q‖². */
+  /** dist(p) = Σ_{i<dim} (q(i) − centT(i·stride + p))² for the cell
+    * columns of lane blocks [b0, b1) (cells [b0·L, b1·L)), 8 cells per
+    * accumulator in ascending i — [[Kernels.subSqDist]] of q and
+    * centroid p, lane by lane. Four blocks share each q(i) broadcast
+    * with four independent accumulator chains, which hides the add
+    * latency; the chains never mix, so the bits are the one-chain
+    * fold's. `centT` is [[cellMajor]] (stride = centT.length / dim);
+    * padded cells come out as ‖q‖². Disjoint block ranges may run on
+    * different threads into one `dist`. */
   def cellDistsExact(centT: Array[Double], q: Array[Double],
-                     dist: Array[Double]): Unit = {
+                     dist: Array[Double], b0: Int, b1: Int): Unit = {
     val L = SPD.length()
     val dim = q.length
     val stride = centT.length / dim
     require(stride * dim == centT.length && stride % L == 0,
       s"${centT.length} entries are not dim $dim x a multiple of $L lanes")
-    var p = 0
-    while (p < stride) {
+    require(0 <= b0 && b0 <= b1 && b1 * L <= stride,
+      s"lane blocks [$b0, $b1) outside ${stride / L}")
+    var p = b0 * L
+    val end = b1 * L
+    while (p + 4 * L <= end) {
+      var a0 = DoubleVector.zero(SPD); var a1 = a0; var a2 = a0; var a3 = a0
+      var i = 0
+      while (i < dim) {
+        val b = DoubleVector.broadcast(SPD, q(i))
+        val o = i * stride + p
+        val d0 = b.sub(DoubleVector.fromArray(SPD, centT, o))
+        a0 = d0.mul(d0).add(a0)
+        val d1 = b.sub(DoubleVector.fromArray(SPD, centT, o + L))
+        a1 = d1.mul(d1).add(a1)
+        val d2 = b.sub(DoubleVector.fromArray(SPD, centT, o + 2 * L))
+        a2 = d2.mul(d2).add(a2)
+        val d3 = b.sub(DoubleVector.fromArray(SPD, centT, o + 3 * L))
+        a3 = d3.mul(d3).add(a3)
+        i += 1
+      }
+      a0.intoArray(dist, p); a1.intoArray(dist, p + L)
+      a2.intoArray(dist, p + 2 * L); a3.intoArray(dist, p + 3 * L)
+      p += 4 * L
+    }
+    while (p < end) {
       var acc = DoubleVector.zero(SPD)
       var i = 0
       while (i < dim) {

@@ -139,7 +139,6 @@ object BinaryQuant {
   def save(thresholds: Array[Double], df: DataFrame, idCol: String,
            vecCol: String, path: String): Unit = {
     val spark = df.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.SaveMode
     signatures(df, idCol, vecCol, thresholds)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")

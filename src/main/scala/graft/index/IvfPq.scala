@@ -52,11 +52,12 @@ case class IvfPqModel(
     codebooks: Array[Array[Array[Double]]]) {     // D × C × (N/D)
   def subDim: Int = dim / config.numDivisions
 
-  // column-major copies read by the Vector-API query prep
-  // (graft.functions.SimdKernels): built once per model, on its first
-  // query through that path, and never serialized
-  @transient private[graft] lazy val codebooksT: Array[Array[Double]] =
-    codebooks.map(graft.functions.SimdKernels.transposed(_))
+  // copies read by the Vector-API query prep (graft.functions.SimdKernels),
+  // built once per model on its first query through that path and never
+  // serialized: each division's codebook as contiguous m×8 code blocks
+  // (codeBlocks) and the centroids column-major (cellMajor)
+  @transient private[graft] lazy val codebookBlocks: Array[Array[Double]] =
+    codebooks.map(graft.functions.SimdKernels.codeBlocks)
   @transient private[graft] lazy val centroidsT: Array[Double] =
     graft.functions.SimdKernels.cellMajor(partitionCentroids)
 }
@@ -109,8 +110,6 @@ object IvfPqBuilder {
     require(dim % config.numDivisions == 0,
       s"dim $dim must divide into ${config.numDivisions} divisions") // vector.rs:162-168
     val subDim = dim / config.numDivisions
-    val spark = df.sparkSession
-    import spark.implicits._
 
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
 
@@ -593,7 +592,6 @@ object IvfPqBuilder {
     * rewrite. A fully-tombstoned store compacts to a zero-row but
     * schema-bearing codes table (load and queries keep working). */
   def compactStore(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
     val (_, live0) = load(spark, path)
     val live = live0.select("id", "partition", "codes")
     // the rewrite + crash-recoverable swap is the shared lifecycle
@@ -684,7 +682,6 @@ object IvfPqBuilder {
   def rebalanceStorePartial(spark: SparkSession, path: String,
                             factorX100: Long = 200L,
                             log: String => Unit = _ => ()): (IvfPqModel, Seq[Int]) = {
-    import spark.implicits._
     require(factorX100 > 100L,
       s"imbalance factor must exceed 1.0 (100), got $factorX100")
     val (model, live) = load(spark, path)

@@ -38,8 +38,6 @@ object IvfSq8 {
           numPartitions: Int, maxIter: Int = 20,
           trainPointsPerCentroid: Int = 256, seed: Long = 42L)
       : (IvfSq8Model, DataFrame) = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val cap = numPartitions.toLong * trainPointsPerCentroid
     val nRows = base.count()
@@ -177,7 +175,6 @@ object IvfSq8 {
     * histogram. Bit-exact by construction. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    path: String): Unit = {
-    import spark.implicits._
     val (_, live) = load(spark, path)
     IvfPqBuilder.writeStatRows(spark, path,
       StoreLifecycle.compactPartitioned(spark, path,

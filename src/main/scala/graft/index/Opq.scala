@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.FastFunctions.{litDoubles, nearestCentroidL2, pqEncodeF, pqReconstructF, rotateF, subCentroidF}
@@ -103,8 +103,6 @@ object OpqBuilder {
     require(dim % config.numDivisions == 0,
       s"dim $dim must divide into ${config.numDivisions} divisions")
     require(opqIters >= 1, s"opqIters must be >= 1, got $opqIters")
-    val spark = df.sparkSession
-    import spark.implicits._
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
 
     // one driver-collected training sample serves the coarse fit and the
@@ -536,7 +534,6 @@ object OpqBuilder {
     * centroids/codebooks, so save/load stays bit-exact. */
   def save(model: OpqModel, encoded: DataFrame, path: String): Unit = {
     val spark = encoded.sparkSession
-    import spark.implicits._
     IvfPqBuilder.save(model.ivf, encoded, path)
     MetaIO.write(spark.sparkContext.hadoopConfiguration, s"$path/rotation",
       Seq("row" -> MetaIO.IntT, "values" -> MetaIO.DoublesT),

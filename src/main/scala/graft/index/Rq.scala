@@ -50,8 +50,6 @@ object Rq {
                 trainPointsPerCentroid: Int = 256): (RqModel, DataFrame) = {
     require(model.dim % numDivisions2 == 0,
       s"dim ${model.dim} must divide into $numDivisions2 refine divisions")
-    val spark = encoded.sparkSession
-    import spark.implicits._
     val m2 = model.dim / numDivisions2
     val errs = encoded.select(errorCol(model).as("e"))
     val cap = numCodes2.toLong * trainPointsPerCentroid
@@ -102,7 +100,6 @@ object Rq {
     * the same read-verify discipline. */
   def save(rq: RqModel, encoded2: DataFrame, path: String): Unit = {
     val spark = encoded2.sparkSession
-    import spark.implicits._
     IvfPqBuilder.save(rq.base, encoded2, path)
     IvfPqBuilder.writeCodebooks(spark, s"$path/refine/codebooks",
       rq.refineBooks)

@@ -68,7 +68,6 @@ object Sq8 {
     * one (the ann_sq8_stored invariant). */
   def save(model: Sq8Model, encoded: DataFrame, path: String): Unit = {
     val spark = encoded.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.SaveMode
     encoded.select("id", "sq8")
       .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")

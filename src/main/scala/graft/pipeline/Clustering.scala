@@ -36,8 +36,6 @@ object Clustering {
           trainPointsPerCentroid: Int = 256, maxIter: Int = 25,
           tol: Double = 1e-4): ClusterModel = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = df.sparkSession
-    import spark.implicits._
     val base = df.select(col(vecCol).as("vec"))
     val cap = k.toLong * trainPointsPerCentroid
     val nRows = if (trainPointsPerCentroid > 0) base.count() else 0L

@@ -263,8 +263,6 @@ object Multimodal {
     * deployment would hold one ImageReader per partition through the
     * [[decodeBatched]] seam). */
   def imageIoDecode(payload: Array[Byte], w: Int, h: Int): Array[Float] = {
-    import java.awt.RenderingHints
-    import java.awt.image.BufferedImage
     // ImageIO.read(ImageInputStream) closes the stream itself — no
     // explicit close (a second close throws); the memory-backed stream
     // holds no resource beyond the heap either way

@@ -39,12 +39,19 @@ object AnnQuery {
     nearestCells(model.partitionCentroids, model.centroidsT, q, nprobe)
   }
 
+  /** Lane-block × dimension steps one selection unit must cover before
+    * [[nearestCells]] splits its distances across the serve crew. */
+  private val SelectUnitSteps = 4096
+
   /** The nprobe cells nearest q, ascending by (squared distance, cell
     * id), each with the localized query q − centroid. Distances fold
     * through [[Kernels.subSqDist]] or its lane-exact twin
     * [[SimdKernels.cellDistsExact]] over `centT` (the
-    * [[SimdKernels.cellMajor]] copy, forced only on that path); only the
-    * winners are localized. */
+    * [[SimdKernels.cellMajor]] copy, forced only on that path), whose
+    * lane blocks split into up to one range per core on the
+    * [[ServeCrew]] once there are enough of them (a 1536-d, 100-cell
+    * model makes 4 units). The top-n pass and the localization of the
+    * winners are serial. */
   private[graft] def nearestCells(centroids: Array[Array[Double]],
       centT: => Array[Double], q: Array[Double],
       nprobe: Int): Array[(Int, Array[Double])] = {
@@ -56,7 +63,13 @@ object AnnQuery {
       if (SimdSupport.available) {
         val ct = centT
         val out = new Array[Double](ct.length / dim)
-        SimdKernels.cellDistsExact(ct, q, out)
+        val blocks = out.length / SimdKernels.lanes
+        val units = math.max(1, math.min(ServeCrew.helpers + 1,
+          (blocks.toLong * dim / SelectUnitSteps).toInt))
+        ServeCrew.fanOut(units, units) { u =>
+          SimdKernels.cellDistsExact(ct, q, out,
+            u * blocks / units, (u + 1) * blocks / units)
+        }
         out
       } else Array.tabulate(n)(p => Kernels.subSqDist(q, 0, centroids(p), 0, dim))
     // insertion into the sorted best-so-far; cells arrive in id order,
@@ -112,7 +125,7 @@ object AnnQuery {
     var div = div0
     while (div < div1) {
       if (SimdSupport.available)
-        SimdKernels.adcTablesExact(model.codebooksT(div), m, numCodes,
+        SimdKernels.adcTablesExact(model.codebookBlocks(div), m, numCodes,
           locs, div * m, flats, div * numCodes)
       else {
         val cbs = model.codebooks(div)

@@ -159,16 +159,16 @@ final class LocalServe private[query] (
     * query, then one flat D·C ADC table per probe
     * ([[AnnQuery.adcTablesInto]]: entries, fold order and bits of
     * [[AnnQuery.adcTable]], so sq_dist stays bit-identical to the
-    * cluster path). The table prep is the whole of a warm query's cost
-    * bar a few-µs scan, so it runs as D units of one division each —
-    * every probe's tables for that division, in one pass over its
-    * codebook — and the rotation as 128-row units of every probe. Up to
-    * min(D, cores) workers claim units: the calling thread and helpers
-    * on the global pool ([[LocalServe.fanOut]]) — one query's prep in
-    * parallel, which at low concurrency beats a calling-thread-only
-    * prep (the r12 A/B in BENCH_NOTES.md). `perfbench` `reference`
-    * measures it (`op_p50_ms`, `query.adc_table_us`,
-    * `query.select_partitions_us`). */
+    * cluster path). With cell selection (itself split across the crew
+    * in [[AnnQuery.nearestCells]]) the table prep is the whole of a warm
+    * query's cost bar a few-µs scan, so it runs as D units of one
+    * division each — every probe's tables for that division, in one
+    * pass over its code-block codebook — and the rotation as 128-row
+    * units of every probe. Up to min(D, cores) workers claim units: the
+    * calling thread and the hot [[ServeCrew]], whose helpers are still
+    * spinning from the previous query when queries come back to back.
+    * `perfbench` `reference` measures it (`op_p50_ms`,
+    * `query.adc_table_us`, `query.select_partitions_us`). */
   private def prepare(probes: Array[(Int, Array[Double])]): Array[Array[Double]] = {
     val d = model.config.numDivisions
     val workers = math.min(d, Runtime.getRuntime.availableProcessors())
@@ -180,7 +180,7 @@ final class LocalServe private[query] (
         val dim = r.length
         val block = 128
         val rotated = probes.map(_ => new Array[Double](dim))
-        LocalServe.fanOut(workers, (dim + block - 1) / block) { u =>
+        ServeCrew.fanOut(workers, (dim + block - 1) / block) { u =>
           val (r0, r1) = (u * block, math.min(dim, (u + 1) * block))
           var pi = 0
           while (pi < probes.length) {
@@ -205,7 +205,7 @@ final class LocalServe private[query] (
         rotated
     }
     val flats = probes.map(_ => new Array[Double](d * model.config.numCodes))
-    LocalServe.fanOut(workers, d) { div =>
+    ServeCrew.fanOut(workers, d) { div =>
       AnnQuery.adcTablesInto(model, locs, flats, div, div + 1)
     }
     flats
@@ -344,9 +344,9 @@ private[query] final case class RqCell(ids: Array[Long], codes: Array[Int],
   * per-row distance replays [[graft.functions.Kernels.sq8Dist]]'s fold
   * EXACTLY, so results are bit-identical to [[graft.index.IvfSq8.topK]]
   * (gated by `ann_sq8_local_serve`). Distances are computed into a
-  * per-cell array by row-chunked futures (each element independent —
-  * deterministic) and the heap pass runs single-threaded in row order,
-  * preserving the (sq_dist, id) tie contract. */
+  * per-cell array by row-block units on the [[ServeCrew]] (each element
+  * independent — deterministic) and the heap pass runs single-threaded
+  * in row order, preserving the (sq_dist, id) tie contract. */
 final class LocalServeSq8 private[query] (
     val model: graft.index.IvfSq8Model,
     pinned: Map[Int, Sq8Cell]) extends CellShard {
@@ -380,47 +380,45 @@ final class LocalServeSq8 private[query] (
     require(missing.isEmpty,
       s"probed cells not resident on this server: ${missing.mkString(",")}" +
         s" (resident: ${cells.mkString(",")})")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val dim = model.dim
     val mins = model.codec.mins
     val scales = model.codec.scales
     val columnMajor = LocalServeSq8.columnMajor
-    val futs = probes.map { case (cell, localized) =>
-      val codes = pinned(cell).codes
-      val n = pinned(cell).ids.length
-      val out = new Array[Double](n)
-      val block = math.max(1, n / 32)
-      Future.sequence((0 until n by block).map { s0 =>
-        Future {
-          val e = math.min(s0 + block, n)
-          if (columnMajor)
-            // Vector-API fold over the column-major layout — the
-            // scalar fold's exact bits, 8 rows per accumulator
-            graft.functions.SimdKernels.sq8DistExact(codes, n, dim,
-              localized, mins, scales, out, s0, e)
-          else {
-            var r = s0
-            while (r < e) {
-              val base = r * dim
-              var s = 0.0
-              var i = 0
-              while (i < dim) { // identical fold to Kernels.sq8Dist
-                val d = localized(i) -
-                  (mins(i) + (codes(base + i) & 0xFF) * scales(i))
-                s += d * d
-                i += 1
-              }
-              out(r) = s
-              r += 1
-            }
+    val pins = probes.map(p => pinned(p._1))
+    val dists = pins.map(c => new Array[Double](c.ids.length))
+    // row-block units across every probed cell: (probe, first row)
+    val units = pins.indices.flatMap { pi =>
+      (0 until pins(pi).ids.length by LocalServeSq8.UnitRows).map((pi, _))
+    }.toArray
+    ServeCrew.fanOut(units.length, units.length) { u =>
+      val (pi, s0) = units(u)
+      val codes = pins(pi).codes
+      val n = pins(pi).ids.length
+      val localized = probes(pi)._2
+      val out = dists(pi)
+      val e = math.min(s0 + LocalServeSq8.UnitRows, n)
+      if (columnMajor)
+        // Vector-API fold over the column-major layout — the
+        // scalar fold's exact bits, 8 rows per accumulator
+        graft.functions.SimdKernels.sq8DistExact(codes, n, dim,
+          localized, mins, scales, out, s0, e)
+      else {
+        var r = s0
+        while (r < e) {
+          val base = r * dim
+          var s = 0.0
+          var i = 0
+          while (i < dim) { // identical fold to Kernels.sq8Dist
+            val d = localized(i) -
+              (mins(i) + (codes(base + i) & 0xFF) * scales(i))
+            s += d * d
+            i += 1
           }
+          out(r) = s
+          r += 1
         }
-      }).map(_ => out)
+      }
     }
-    val dists: Array[Array[Double]] =
-      Await.result(Future.sequence(futs.toSeq), Duration.Inf).toArray
     val heap = new java.util.PriorityQueue[(Long, Int, Double)](
       math.max(k, 1),
       (a: (Long, Int, Double), b: (Long, Int, Double)) => {
@@ -457,6 +455,9 @@ object LocalServeSq8 {
   // same bits) runs, row-major for the scalar fold; residency is dim
   // bytes/vector either way
   private val columnMajor = graft.functions.SimdSupport.available
+
+  /** Rows per distance unit of one SQ8 query (a multiple of the 8 lanes). */
+  private val UnitRows = 256
 
   /** Pin an IVF+SQ8 encoded (id, partition, sq8) relation — callers
     * prune to the cells this box serves FIRST (the [[LocalServe]]
@@ -497,36 +498,6 @@ private[query] final case class Sq8Cell(ids: Array[Long], codes: Array[Byte]) {
 }
 
 object LocalServe {
-
-  /** Runs body(u) for every unit u ∈ [0, units) on up to `workers`
-    * threads: the calling thread and workers − 1 helpers on the global
-    * pool claim units from one counter, so a helper that starts late
-    * finds less work instead of holding the query up (on a 4-core box,
-    * claimed units answered in ~80 µs where four fixed division ranges
-    * took ~115 µs, waiting on the slowest helper to wake). Returns once
-    * every unit has finished, rethrowing the first failure. */
-  private def fanOut(workers: Int, units: Int)(body: Int => Unit): Unit = {
-    val next = new java.util.concurrent.atomic.AtomicInteger(0)
-    val left = new java.util.concurrent.CountDownLatch(units)
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    def work(): Unit = {
-      var u = next.getAndIncrement()
-      while (u < units) {
-        try body(u)
-        catch { case t: Throwable => failure.compareAndSet(null, t) }
-        finally left.countDown()
-        u = next.getAndIncrement()
-      }
-    }
-    var h = 1
-    while (h < workers) {
-      scala.concurrent.ExecutionContext.global.execute(() => work())
-      h += 1
-    }
-    work()
-    left.await()
-    if (failure.get != null) throw failure.get
-  }
 
   /** Load a saved store's model and pin the requested cells' code
     * arrays driver-side (all cells when `cells` is empty — tests and
@@ -634,14 +605,19 @@ object LocalServe {
     * limit, `ArraysSupport.SOFT_MAX_ARRAY_LENGTH`). */
   private val MaxArrayLength = Int.MaxValue - 8
 
-  /** Length of a cell's flat `rows` × `width` buffer, computed in Long:
-    * a cell too large for one JVM array fails loudly, naming the cell,
-    * instead of wrapping Int to a negative or short size (a 1536-d SQ8
-    * cell passes 2^31 at ~1.4M rows). */
-  private[query] def flatLength(cell: Int, rows: Int, width: Int): Int = {
+  /** Length of a cell's flat `rows` × `width` buffer — [[bufferLength]]
+    * naming the cell (a 1536-d SQ8 cell passes 2^31 at ~1.4M rows). */
+  private[query] def flatLength(cell: Int, rows: Int, width: Int): Int =
+    bufferLength(s"cell $cell", rows, width)
+
+  /** Length of a flat `rows` × `width` buffer, computed in Long: a
+    * buffer too large for one JVM array fails loudly, naming `what`,
+    * its rows and width, instead of wrapping Int to a negative or short
+    * size. */
+  private[query] def bufferLength(what: String, rows: Int, width: Int): Int = {
     val n = rows.toLong * width
     require(n <= MaxArrayLength,
-      s"cell $cell: $rows rows × $width per row = $n elements, more than " +
+      s"$what: $rows rows × $width per row = $n elements, more than " +
         s"one JVM array holds ($MaxArrayLength)")
     n.toInt
   }
@@ -779,8 +755,9 @@ object LocalServeHamming {
     val rows = sigs.select(col("id").cast("long"), col("sig"))
       .collect()
       .sortBy(_.getLong(0))
+    val (sigLen, _) = pinLengths(rows.length, dim, pinFloats = false)
     val ids = new Array[Long](rows.length)
-    val packed = new Array[Long](rows.length * w)
+    val packed = new Array[Long](sigLen)
     var r = 0
     while (r < rows.length) {
       ids(r) = rows(r).getLong(0)
@@ -811,9 +788,10 @@ object LocalServeHamming {
       .collect()
       .sortBy(_.getLong(0))
     val w = (dim + 63) >>> 6
+    val (sigLen, floatLen) = pinLengths(rows.length, dim, pinFloats)
     val ids = new Array[Long](rows.length)
-    val sigs = new Array[Long](rows.length * w)
-    val floats = if (pinFloats) new Array[Float](rows.length * dim) else null
+    val sigs = new Array[Long](sigLen)
+    val floats = if (pinFloats) new Array[Float](floatLen) else null
     var r = 0
     while (r < rows.length) {
       ids(r) = rows(r).getLong(0)
@@ -830,6 +808,16 @@ object LocalServeHamming {
     }
     new LocalServeHamming(thr, ids, sigs, w, floats, dim)
   }
+
+  /** Lengths of a pin's signature buffer (⌈dim/64⌉ words per row) and,
+    * with `pinFloats`, its float buffer (dim per row; else 0), sized in
+    * Long: a 1536-d float pin passes one JVM array at ~1.4M rows and
+    * fails loudly instead of wrapping. */
+  private[query] def pinLengths(rows: Int, dim: Int,
+                                pinFloats: Boolean): (Int, Int) =
+    (LocalServe.bufferLength("Hamming signatures", rows, (dim + 63) >>> 6),
+      if (pinFloats) LocalServe.bufferLength("Hamming float pin", rows, dim)
+      else 0)
 }
 
 

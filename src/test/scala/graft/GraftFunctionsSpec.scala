@@ -277,8 +277,6 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL surface: sub_centroid, sq8 round trip and sq8_dist compose") {
-    import graft.functions.FastFunctions
-    import org.apache.spark.sql.functions._
     val viaSql = spark.sql(
       """SELECT graft_sub_centroid(array(CAST(5.0 AS FLOAT), CAST(7.0 AS FLOAT)),
         |  array(1.0D, 2.0D, 3.0D, 4.0D), 1)""".stripMargin)

@@ -43,7 +43,7 @@ class SimdKernelsSpec extends AnyFunSuite {
       val cb = Array.fill(numCodes)(values(m, rnd))
       val locs = Array.fill(nprobe)(values(3 * m, rnd))
       val outs = Array.fill(nprobe)(new Array[Double](3 * numCodes))
-      SimdKernels.adcTablesExact(SimdKernels.transposed(cb), m, numCodes,
+      SimdKernels.adcTablesExact(SimdKernels.codeBlocks(cb), m, numCodes,
         locs, div * m, outs, div * numCodes)
       val bad = for {
         p <- 0 until nprobe
@@ -78,7 +78,8 @@ class SimdKernelsSpec extends AnyFunSuite {
       val dist = Array.tabulate(p)(c => Kernels.subSqDist(q, 0, cents(c), 0, dim))
       val simdOk = !SimdSupport.available || {
         val got = new Array[Double]((p + 7) / 8 * 8)
-        SimdKernels.cellDistsExact(SimdKernels.cellMajor(cents), q, got)
+        SimdKernels.cellDistsExact(SimdKernels.cellMajor(cents), q, got,
+          0, got.length / 8)
         (0 until p).forall(c => bits(got(c)) == bits(dist(c)))
       }
       // the rule the cluster path always applied: sort by (dist, id)
@@ -92,6 +93,70 @@ class SimdKernelsSpec extends AnyFunSuite {
         Prop(got.map(_._1).toSeq == want) :|
           s"cells ${got.map(_._1).toSeq} want $want" &&
         Prop(locOk) :| "localized query bits"
+    })
+  }
+
+  test("codeBlocks lays each 8 codes out as one m x 8 run, last block " +
+      "zero-padded") {
+    assumeSimd()
+    val cb = Array.tabulate(11, 3)((c, i) => c * 10.0 + i + 1)
+    val got = SimdKernels.codeBlocks(cb)
+    assert(got.length === 2 * 3 * 8)
+    for (c <- 0 until 16; i <- 0 until 3)
+      assert(got(c / 8 * 24 + i * 8 + c % 8) ===
+        (if (c < 11) cb(c)(i) else 0.0), s"code $c dim $i")
+  }
+
+  test("cellDistsExact over any split of its lane blocks == one call " +
+      "over all of them, bit for bit") {
+    assumeSimd()
+    val shapes = for {
+      p <- Gen.choose(1, 120)
+      dim <- Gen.choose(1, 40)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (p, dim, seed)
+    check(forAll(shapes) { case (p, dim, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val cents = Array.fill(p)(values(dim, rnd))
+      val q = values(dim, rnd)
+      val centT = SimdKernels.cellMajor(cents)
+      val blocks = centT.length / dim / 8
+      val whole = new Array[Double](blocks * 8)
+      SimdKernels.cellDistsExact(centT, q, whole, 0, blocks)
+      val cuts = (0 +: Seq.fill(rnd.nextInt(4))(rnd.nextInt(blocks + 1)) :+
+        blocks).sorted
+      val split = new Array[Double](blocks * 8)
+      cuts.sliding(2).foreach { case Seq(b0, b1) =>
+        SimdKernels.cellDistsExact(centT, q, split, b0, b1)
+      }
+      val bad = (0 until p).filter(c => bits(split(c)) != bits(whole(c)) ||
+        bits(whole(c)) != bits(Kernels.subSqDist(q, 0, cents(c), 0, dim)))
+      Prop(bad.isEmpty) :| s"P=$p dim=$dim cuts=$cuts cells ${bad.take(3)}"
+    })
+  }
+
+  test("nearestCells split across the serve crew (many cells, wide " +
+      "dims) keeps the serial (dist, id) rule and localized bits") {
+    val shapes = for {
+      p <- Gen.choose(40, 130)
+      dim <- Gen.oneOf(512, 1536)
+      nprobe <- Gen.choose(1, 12)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (p, dim, nprobe, seed)
+    check(forAll(shapes) { case (p, dim, nprobe, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val cents = Array.fill(p)(values(dim, rnd))
+      cents(rnd.nextInt(p)) = cents(0).clone() // one tie decided by id
+      val q = values(dim, rnd)
+      val dist = Array.tabulate(p)(c => Kernels.subSqDist(q, 0, cents(c), 0, dim))
+      val want = (0 until p).sortBy(c => (dist(c), c)).take(nprobe)
+      val got = graft.query.AnnQuery.nearestCells(cents,
+        SimdKernels.cellMajor(cents), q, nprobe)
+      Prop(got.map(_._1).toSeq == want) :|
+        s"cells ${got.map(_._1).toSeq} want $want" &&
+        Prop(got.forall { case (c, loc) =>
+          (0 until dim).forall(i => bits(loc(i)) == bits(q(i) - cents(c)(i)))
+        }) :| "localized query bits"
     })
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.functions.FastFunctions.litDoubles
 import graft.pipeline.Dedup
 import graft.query.ExactKnn
 

@@ -495,7 +495,6 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("rebalanceStore: drifted store re-fits balanced from its own contents") {
-    import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_rebal").toString
     val out = java.nio.file.Files.createTempDirectory("ivfpq_rebal_new").toString
     try {
@@ -548,7 +547,6 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("rebalanceStorePartial: hot cells split in place, cold files byte-identical") {
-    import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_rebal_part").toString
     def fileHashes(): Map[String, String] = {
       val root = new java.io.File(s"$dir/codes")

@@ -73,7 +73,6 @@ class ProfileSpec extends AnyFunSuite {
   }
   test("corrExact: hand-checked components, perfect correlation hits " +
       "exactly 1e6, zero variance yields NULL r2") {
-    import org.apache.spark.sql.functions.col
     // (1,2),(2,4),(3,6): y = 2x → r² = 1 exactly
     val perfect = Seq((1L, 2L), (2L, 4L), (3L, 6L)).toDF("x", "y")
     val p = Profile.corrExact(perfect, "x", "y").collect()(0)
@@ -98,7 +97,6 @@ class ProfileSpec extends AnyFunSuite {
   }
   test("mutualInfoCells: zero on independence, ln(2)-scaled on a " +
       "deterministic copy, NULLs excluded") {
-    import org.apache.spark.sql.functions.col
     // perfectly independent 2x2 (every cell = 25 of 100): MI = 0
     val indep = (0 until 100).map(i => (i % 2, (i / 2) % 2))
       .toDF("x", "y")

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

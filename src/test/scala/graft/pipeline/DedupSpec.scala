@@ -754,7 +754,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("keepBest keeps the highest score per component, min-id on ties") {
-    import org.apache.spark.sql.functions.col
     // components: {1,2,3} (chain), {10,11}, singletons 20, 21
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
     val scored = Seq((1L, 5L), (2L, 9L), (3L, 9L), (10L, 4L), (11L, 4L),
@@ -770,7 +769,7 @@ class DedupSpec extends AnyFunSuite {
   }
   test("sortedNeighborPairs pairs only within the rank window inside a " +
       "block and verifies exact distance") {
-    import org.apache.spark.sql.functions.{col, lit, substring}
+    import org.apache.spark.sql.functions.{col, substring}
     // block A sorted: a01 a02 a03 a99; window 1 → (a01,a02), (a02,a03)
     // adjacent; a99 adjacent to a03 but distance 2 fails maxDist 1;
     // block B's b01 never pairs across the block boundary with a01
@@ -816,7 +815,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("goldenRecords survives the latest NON-NULL value per field " +
       "and never lets a newer null erase an older value") {
-    import org.apache.spark.sql.functions.col
     val rows = Seq(
       // entity 1: ts 3 is newest but has no phone → phone from ts 2;
       // name from ts 3

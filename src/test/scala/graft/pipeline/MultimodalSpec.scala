@@ -185,7 +185,7 @@ class MultimodalSpec extends AnyFunSuite {
         silent.count(identity).toLong, longest, lead, trail)), s"doc $id")
     }
     // synthetic edges: all-silent (flat 128s) and all-loud payloads
-    import org.apache.spark.sql.functions.{col, lit, unhex, concat_ws}
+    import org.apache.spark.sql.functions.{lit, unhex}
     val flat = spark.range(1).select(lit(7L).as("media_id"),
       unhex(lit("80" * 12)).as("payload"))
     val f = Multimodal.silenceStats(flat, fb, th).head()
@@ -199,7 +199,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
   test("shotSegments assigns contiguous shots at frame-sum jumps and " +
       "shotSummary reports the islands") {
-    import org.apache.spark.sql.functions.col
     // one media, 16-byte frames, stride 1: payload crafted so frame
     // sums are [flat, flat, JUMP, flat] → 2 shots of lengths 2 and 2
     val flat = Array.fill(16)('a'.toByte)
@@ -316,7 +315,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
   test("dHash64: gradient bits match a brute-force recompute; equal " +
       "payloads collide; global brightness shift is invariant") {
-    import org.apache.spark.sql.functions.col
     val got = Multimodal.dHash64(media)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val texts = docs.collect()

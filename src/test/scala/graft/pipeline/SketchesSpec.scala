@@ -208,7 +208,6 @@ class SketchesSpec extends AnyFunSuite {
   }
   test("joinSizeFromHistograms predicts the exact equi-join size and " +
       "merged batch histograms predict identically") {
-    import org.apache.spark.sql.functions.col
     val a = Seq(1L, 1L, 2L, 3L, 3L, 3L).toDF("k")
     val b = Seq(1L, 3L, 3L, 9L).toDF("k")
     val pred = Sketches.joinSizeFromHistograms(

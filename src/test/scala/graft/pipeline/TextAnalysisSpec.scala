@@ -246,7 +246,6 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("gopherRules: each rule flips independently and keep follows score") {
-    import org.apache.spark.sql.functions.col
     val good = ("the quick brown fox of the woods is happy to run and " +
       "jump in a field " + (1 to 30).map(i => s"word$i").mkString(" "))
     val docs = Seq(
@@ -275,7 +274,6 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("vocabGrowth: running distinct equals a sequential fold") {
-    import org.apache.spark.sql.functions.col
     val docs = Seq(
       (50L, "a b c a"), (100L, "b c d"), (150L, "e"), (200L, "a e f g"))
       .toDF("doc_id", "text")

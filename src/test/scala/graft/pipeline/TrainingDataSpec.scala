@@ -577,7 +577,6 @@ class TrainingDataSpec extends AnyFunSuite {
   }
 
   test("groupAwareFolds: clusters share a fold, singletons match kFolds") {
-    import org.apache.spark.sql.functions.col
     val docs = (1L to 40L).toDF("doc_id")
     // components: {1,2,3} (chain), {10,11}; everything else singleton
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
@@ -818,7 +817,6 @@ class TrainingDataSpec extends AnyFunSuite {
 
   test("samplerStrategyFor's premise is plan-verified: literal rank " +
       "bounds plan WindowGroupLimit, dynamic quota bounds do not") {
-    import org.apache.spark.sql.functions.col
     val df = (1L to 2000L).map(i => (i, s"s${i % 4}")).toDF("id", "g")
     // literal cap: Spark 4 rewrites row_number <= lit into a map-side
     // partial top-k BEFORE the exchange — the fact that makes the

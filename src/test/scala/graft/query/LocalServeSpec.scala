@@ -458,4 +458,19 @@ class LocalServeSpec extends AnyFunSuite {
       1536000000)
     assert(LocalServe.flatLength(cell = 0, rows = 0, width = 1536) === 0)
   }
+
+  test("Hamming pins are sized in Long: a float pin too large for a JVM " +
+      "array fails loudly with its rows and width") {
+    // 1,400,000 × 1536 floats wraps Int; the signatures (24 words per
+    // row) still fit — checked without allocating
+    val ex = intercept[IllegalArgumentException] {
+      LocalServeHamming.pinLengths(1400000, 1536, pinFloats = true)
+    }
+    assert(ex.getMessage.contains("Hamming float pin: 1400000 rows × 1536"))
+    assert(ex.getMessage.contains("2150400000"))
+    assert(LocalServeHamming.pinLengths(1400000, 1536, pinFloats = false) ===
+      ((1400000 * 24, 0)))
+    assert(LocalServeHamming.pinLengths(1000, 100, pinFloats = true) ===
+      ((2000, 100000)))
+  }
 }

@@ -198,7 +198,6 @@ class ServeRouterSpec extends AnyFunSuite {
 
   test("lazy SQ8 + RQ fleets: ServeRouterSq8Lazy and ServeRouterRqLazy " +
       "match their single boxes bit-exactly, pinning only routed cells") {
-    import org.apache.spark.sql.functions.col
     // SQ8 lazy fleet
     val (sqModel, sqEnc0) = graft.index.IvfSq8.fit(df, "id", "vec", dim,
       numPartitions = 6)

@@ -10,7 +10,6 @@ import graft.TestSpark
   * reasons. */
 class MediaFilesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   test("reads <id>.ext blobs, filters by glob at the listing, and " +
       "quarantines bad names and oversized files with reasons") {

@@ -284,7 +284,6 @@ class EventPipelineSpec extends AnyFunSuite {
   }
   test("pathCounts discovers length-3 journeys with the deterministic " +
       "(ts, event_id) order and top-k cut") {
-    import org.apache.spark.sql.functions.col
     // user 1: a b c d → paths abc, bcd; user 2: a b c → abc;
     // user 3 has only 2 events → no path. Tie at ts=30 broken by id.
     val ev = Seq(
@@ -304,7 +303,6 @@ class EventPipelineSpec extends AnyFunSuite {
   }
   test("cusumShifts equals the textbook max(0, S+x-drift) recurrence " +
       "and flags the sustained shift a z-test misses") {
-    import org.apache.spark.sql.functions.col
     // counts: 5 quiet days at ~drift, then a +3/day shift
     val counts = Seq(10L, 9L, 11L, 10L, 10L, 13L, 13L, 13L, 13L)
     val daily = counts.zipWithIndex
@@ -330,7 +328,6 @@ class EventPipelineSpec extends AnyFunSuite {
   }
   test("attributionLinearDecay splits credit by windowNs - gap with " +
       "floor-ppm shares") {
-    import org.apache.spark.sql.functions.col
     val clicks = Seq((1L, 5L, 900L), (2L, 5L, 700L), (3L, 5L, 100L),
       (4L, 6L, 950L))
       .toDF("click_id", "user_id", "click_ts")
@@ -354,7 +351,6 @@ class EventPipelineSpec extends AnyFunSuite {
   }
   test("sessionFunnel counts only steps completed inside one session " +
       "in strict order") {
-    import org.apache.spark.sql.functions.col
     // user 1 session A: a(0) b(10) c(20) → full funnel;
     // user 1 session B (gap 1000): a(2000) c(2010) → stalls at a
     //   (no b; its c cannot skip the b stage);
