@@ -1,22 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Replica of the driver's t1 smoke: run SparkEntry.entry on sf0.001 and
   * assert rows > 0. Run: sbt "runMain graft.Smoke". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576") // bounded top-k states are k*16 B; the 128-key default
-                   // silently degrades batch k-NN to sort-based partials
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.show(12, truncate = false)

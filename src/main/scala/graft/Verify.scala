@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -24,22 +23,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // graft arithmetic (hash mixing, floor divisions) is wrap-around by
-      // design; ANSI overflow errors are not wanted here.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576") // bounded top-k states are k*16 B; the 128-key default
-                   // silently degrades batch k-NN to sort-based partials
-      // some testdata generations write events.ts as TIMESTAMP(NANOS),
-      // which vanilla Spark rejects; read those as long (ns since epoch).
-      // Tables.events normalizes either physical type to ns-longs.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=name1,name2 restricts the dump to a subset

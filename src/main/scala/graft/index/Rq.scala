@@ -151,36 +151,22 @@ object Rq {
     StoreLifecycle.deleteFromStore(storePath, ids, idCol)
 
   /** Maintenance compaction for a refined store — BOTH layers: the
+    * refine/codes2 table rewrites to its live rows through the shared
+    * flat rewrite and swap ([[StoreLifecycle.rewriteFlat]]), then the
     * level-1 codes fold through [[IvfPqBuilder.compactStore]] (shared
-    * cell-partitioned rewrite + stats reset), and the refine/codes2
-    * table rewrites to its live rows via the shared flat rewrite — a
-    * level-1-only compaction would leave dead codes2 rows (harmless to
-    * reads, the id join drops them, but unbounded as tombstone cycles
-    * accumulate). Order matters: codes2's live set is derived from the
-    * tombstones, so it rewrites FIRST (level-1 compaction drops the
-    * log). Bit-exact by construction on both layers. */
+    * cell-partitioned rewrite + stats reset). A level-1-only compaction
+    * would leave dead codes2 rows (harmless to reads, the id join drops
+    * them, but unbounded as tombstone cycles accumulate). Order matters:
+    * codes2's live set is derived from the tombstones, so it rewrites
+    * FIRST (level-1 compaction drops the log). Bit-exact by construction
+    * on both layers. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    path: String,
                    rowsPerFile: Long = 4L * 1000 * 1000): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val live2 = StoreLifecycle.liveView(spark, path,
-      spark.read.parquet(s"$path/refine/codes2"))
-      .select("id", "codes2")
-    val cnt = live2.count()
-    val nFiles = math.max(1L, (cnt + rowsPerFile - 1) / rowsPerFile).toInt
-    val tmp = s"$path/refine/codes2.compacting"
-    live2.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp)
-    // park-old → install-new → drop-old, the shared swap discipline
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    fs.delete(p(s"$path/refine/codes2.old"), true)
-    require(fs.rename(p(s"$path/refine/codes2"),
-      p(s"$path/refine/codes2.old")), "could not park refine/codes2")
-    require(fs.rename(p(tmp), p(s"$path/refine/codes2")),
-      s"could not install compacted codes2; previous table intact at " +
-        s"$path/refine/codes2.old — rename it back to recover")
-    fs.delete(p(s"$path/refine/codes2.old"), true)
+    StoreLifecycle.rewriteFlat(spark, s"$path/refine/codes2",
+      StoreLifecycle.liveView(spark, path,
+        spark.read.parquet(s"$path/refine/codes2")).select("id", "codes2"),
+      rowsPerFile)
     IvfPqBuilder.compactStore(spark, path)
   }
 

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    in the codes table is rewritten. Idempotent — re-deleting appends
   *    a duplicate tombstone row the anti-join ignores.
   *  - COMPACTION folds appends + tombstones back to the minimal layout
-  *    with the crash-recoverable swap ([[swapInCodes]]): write-new →
+  *    with the crash-recoverable swap ([[swapTable]]): write-new →
   *    park-old → install-new → drop-old. No step deletes data that is
   *    not already installed elsewhere; a crash leaves the table at
   *    `codes`, `codes.old`, or the tmp dir — never nowhere. Run under
@@ -152,23 +152,30 @@ object StoreLifecycle {
     tPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tPath)
   }
 
-  /** Crash-recoverable swap of a freshly-written codes table into place,
-    * then drop the tombstone log: park-old → install-new → drop-old.
-    * `tmp` must already hold the complete new table. */
-  private[index] def swapInCodes(spark: SparkSession, storePath: String,
-                                 tmp: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
+  /** Crash-recoverable swap of a freshly-written table into place:
+    * park-old → install-new → drop-old. `tmp` must already hold the
+    * complete new table. */
+  private def swapTable(spark: SparkSession, table: String,
+                        tmp: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    fs.delete(p(s"$storePath/codes.old"), true)
-    require(fs.rename(p(s"$storePath/codes"), p(s"$storePath/codes.old")),
-      s"compaction swap failed: could not park $storePath/codes — " +
-        "store unchanged")
-    require(fs.rename(p(tmp), p(s"$storePath/codes")),
+    fs.delete(p(s"$table.old"), true)
+    require(fs.rename(p(table), p(s"$table.old")),
+      s"compaction swap failed: could not park $table — store unchanged")
+    require(fs.rename(p(tmp), p(table)),
       s"compaction swap failed: could not install $tmp; the previous " +
-        s"table is intact at $storePath/codes.old — rename it back to recover")
-    fs.delete(p(s"$storePath/codes.old"), true)
-    fs.delete(p(s"$storePath/tombstones"), true)
+        s"table is intact at $table.old — rename it back to recover")
+    fs.delete(p(s"$table.old"), true)
+  }
+
+  /** Drop the tombstone log once a rewritten codes table has folded it
+    * in. */
+  private def dropTombstones(spark: SparkSession, storePath: String): Unit = {
+    val tPath = new org.apache.hadoop.fs.Path(s"$storePath/tombstones")
+    tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(tPath, true)
+    ()
   }
 
   /** Compact a CELL-PARTITIONED store (IVF+PQ, OPQ, IVF+SQ8): rewrite
@@ -194,7 +201,8 @@ object StoreLifecycle {
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     else
       writeCellAligned(live, tmp, statRows.map(_._2), SaveMode.Overwrite)
-    swapInCodes(spark, storePath, tmp)
+    swapTable(spark, s"$storePath/codes", tmp)
+    dropTombstones(spark, storePath)
     statRows
   }
 
@@ -237,13 +245,26 @@ object StoreLifecycle {
                                  live: DataFrame,
                                  rowsPerFile: Long = 4L * 1000 * 1000)
       : Long = {
+    val cnt = rewriteFlat(spark, s"$storePath/codes", live, rowsPerFile)
+    dropTombstones(spark, storePath)
+    cnt
+  }
+
+  /** The flat rewrite under [[compactFlat]], for any table: `live` into
+    * `max(1, ceil(liveCount / rowsPerFile))` files, swapped in as
+    * `table` ([[swapTable]]). Leaves the tombstone log alone, so a
+    * second table derived from it (an RQ store's refine/codes2) can
+    * compact before the codes table drops it. Returns the live row
+    * count. */
+  private[index] def rewriteFlat(spark: SparkSession, table: String,
+                                 live: DataFrame, rowsPerFile: Long): Long = {
     require(rowsPerFile > 0, s"rowsPerFile must be positive, got $rowsPerFile")
     val cnt = live.count()
     val nFiles = math.max(1L, (cnt + rowsPerFile - 1) / rowsPerFile).toInt
-    val tmp = s"$storePath/codes.compacting"
+    val tmp = s"$table.compacting"
     live.repartition(nFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInCodes(spark, storePath, tmp)
+    swapTable(spark, table, tmp)
     cnt
   }
 }

@@ -217,13 +217,7 @@ object ShardServerMain {
     val maxCells = a.getOrElse("max-cells", "0").toInt
     val maxBytes = a.getOrElse("max-bytes", "0").toLong
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val server = (family, lazyOpen) match {

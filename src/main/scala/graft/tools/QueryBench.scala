@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.FastFunctions.pseudoRandomVec
@@ -29,16 +28,7 @@ object QueryBench {
     val nprobe = if (args.length > 2) args(2).toInt else 5
     val reps = if (args.length > 3) args(3).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // the batch top-k groups by query id: thousands of groups per
-      // task, far past ObjectHashAggregate's 128-key sort fallback —
-      // without this the partial aggregate SORTS the scan output
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
+    val spark = graft.GraftSession.builder(cpus)
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "48g"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

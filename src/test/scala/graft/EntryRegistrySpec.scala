@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry hygiene for the driver contract: every query has an oracle
-  * and vice versa, and the SOURCE never declares an entry key twice —
+  * and vice versa, and a registry never declares an entry name twice —
   * Scala Map keeps the last duplicate silently, which once shadowed a
   * live gate entry (round 7's events_sessionize collision). */
 class EntryRegistrySpec extends AnyFunSuite {
@@ -15,19 +15,18 @@ class EntryRegistrySpec extends AnyFunSuite {
     assert((o -- q) === Set.empty[String], "oracles missing queries")
   }
 
-  test("no entry key is declared more than twice in the source " +
-      "(queries + oracle; a third literal means a silent Map shadow)") {
-    val src = scala.io.Source.fromFile(
-      "src/main/scala/graft/SparkEntry.scala", "UTF-8").mkString
-    val keys = "\"([a-z0-9_]+)\" ->".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val counts = keys.groupBy(identity).view.mapValues(_.size)
-    val dups = counts.filter(_._2 > 2).keys.toSeq.sorted
-    assert(dups.isEmpty, s"entry keys declared >2x: $dups")
-    // and every registered entry appears exactly twice in the source
-    val under = SparkEntry.queries.keySet
-      .filter(k => counts.getOrElse(k, 0) != 2).toSeq.sorted
-    assert(under.isEmpty, s"entry keys not declared exactly twice: $under")
+  // a Map would silently keep the last declaration
+  test("a registry declaring one name twice fails to build") {
+    def e(name: String) =
+      graft.entries.Entry(name, (s, _) => s.emptyDataFrame, "SELECT 1")
+    val err = intercept[IllegalArgumentException](graft.entries.Entry
+      .registry(Seq(e("a_one"), e("a_two")), Seq(e("b_one"), e("a_two"))))
+    assert(err.getMessage.contains("a_two"))
+    assert(!err.getMessage.contains("a_one"))
+    assert(graft.entries.Entry.registry(Seq(e("a_one")), Seq(e("b_one")))
+      .map(_.name) === Seq("a_one", "b_one"))
+    // the live registry goes through the same concatenation
+    assert(SparkEntry.entries.size === SparkEntry.queries.size)
   }
 
   test("committed REGISTRY.md matches the registry (regenerate with " +

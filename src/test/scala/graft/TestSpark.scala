@@ -5,16 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (sbt forks one test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576") // bounded top-k states are k*16 B; the 128-key default
-                   // silently degrades batch k-NN to sort-based partials
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.builder("8")
       // saveAsTable targets (BucketedTablesSpec) land in a temp dir,
       // not the repo working directory
       .config("spark.sql.warehouse.dir",

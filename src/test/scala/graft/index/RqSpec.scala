@@ -115,9 +115,19 @@ class RqSpec extends AnyFunSuite {
     val ids = enc2b.select("id").collect().map(_.getLong(0)).toSet
     assert(!ids.contains(3L) && !ids.contains(7L) && !ids.contains(11L))
     assert(ids.size === 397)
-    // the codes2 TABLE itself holds only live rows post-compaction
-    assert(spark.read.parquet(s"$dir/refine/codes2").count() === 397)
+    // the codes2 TABLE itself holds exactly the live ids post-compaction
+    val ids2 = spark.read.parquet(s"$dir/refine/codes2").select("id")
+      .collect().map(_.getLong(0))
+    assert(ids2.length === 397)
+    assert(ids2.toSet === (0L until 400L).toSet -- Set(3L, 7L, 11L))
     assert(!StoreLifecycle.hasTombstones(spark, dir))
+    // both swaps finished: no parked or half-written table is left
+    val leftovers = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get(dir))) { w =>
+      w.toArray.map(_.toString)
+        .filter(f => f.endsWith(".compacting") || f.endsWith(".old"))
+    }
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
     // surviving rows still answer refined queries deterministically
     val q = vecs.where(col("id") === 5L).head()
       .getSeq[Float](1).map(_.toDouble).toArray
